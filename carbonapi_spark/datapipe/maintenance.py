@@ -310,13 +310,15 @@ def _partition_stats(spark, table_path: str, df,
     257-dir band layout) — is built ONLY when the distributed fallback
     scan is actually needed.  Post-rewrite stats calls use this: the
     rewrite preserves the schema, so the caller passes the
-    pre-rewrite schema and a lazy re-read."""
+    pre-rewrite schema and a lazy re-read.  A callable ``df`` without
+    ``schema`` is a misuse and raises ``TypeError``."""
+    if callable(df) and schema is None:
+        raise TypeError("_partition_stats: a callable df needs schema=")
     root = _local_root(table_path)
     if root is not None:
+        schema = df.schema if schema is None else schema
         try:
-            per = _footer_partition_stats(
-                root, schema if schema is not None else df.schema,
-                partition_cols)
+            per = _footer_partition_stats(root, schema, partition_cols)
             if per is not None:
                 return per
         except Exception:

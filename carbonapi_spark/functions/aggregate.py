@@ -40,7 +40,11 @@ SERIES_ALIASES = {
 # densify shuffle of the full point set is skipped — the aggregated output
 # (1 row per bucket) is densified instead, which is orders of magnitude
 # smaller. Count/order-sensitive folds (avg_zero, multiply, first, last,
-# diff, xff-gated anything) still need the dense input.
+# diff, xff-gated anything) still need the dense input. Only single-list
+# callers reach it (aggregate(x, 'sum'), groupByNode(s), groupByTags and
+# the *WithWildcards folds): sumSeries(x) and the other <func>Series
+# aliases go through combine(), which drops raw_df, so they always fold
+# the densified frame.
 _NULL_SKIPPING = frozenset({
     "sum", "total", "avg", "average", "max", "maximum", "min", "minimum",
     "count", "range", "rangeOf", "stddev", "median",

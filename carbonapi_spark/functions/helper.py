@@ -61,7 +61,8 @@ def node_expr(name: Column, idx: int) -> Column:
 
 def agg_key_expr(name: Column, keys: list[int | str]) -> Column:
     """Group key from node indexes and/or tag names, dot-joined
-    (helper.go:85-109; tags via expr/tags/helper.go:160)."""
+    (helper.go:85-109; tags via expr/tags/helper.go:160).  Tags are
+    parsed from the ``name`` column."""
     from carbonapi_spark.sources.lake import tags_expr
 
     parts = []
@@ -69,7 +70,7 @@ def agg_key_expr(name: Column, keys: list[int | str]) -> Column:
         if isinstance(k, int):
             parts.append(node_expr(name, k))
         else:
-            parts.append(tags_expr(name).getItem(k))
+            parts.append(tags_expr().getItem(k))
     if not parts:
         return name
     return F.concat_ws(".", *[F.coalesce(p, F.lit("")) for p in parts])

@@ -22,6 +22,13 @@ DataFrame
 
 Everything here is lazy DataFrame algebra: a full render builds ONE Spark
 job DAG and only the serializer collects.
+
+Where densification happens: an operator that reads ``df`` (windows,
+order-sensitive folds, pointwise maps) gets it in the plan, as the one
+shuffle of ``densify``.  A terminal frame that is still a densified scan
+(or a NULL-skipping aggregate of one) keeps the sparse plan as ``raw_df``;
+the serializer collects that and fills the gaps on the driver, so a plain
+fetch renders in one Spark job with no exchange.
 """
 
 from __future__ import annotations
@@ -52,10 +59,12 @@ class SeriesFrame:
     consolidation: str = "average"
     xff: float = 0.0
     dense: bool = False
-    # the pre-densification plan, kept by densify() ONLY: NULL-skipping
-    # aggregations can consume it directly and skip the densify shuffle
-    # (missing row == NULL row for those folds). Any transform invalidates
-    # it (with_df/map_value/map_name clear it).
+    # the pre-densification plan, kept by densify() ONLY: while it is set,
+    # ``df`` is exactly densify(raw_df) over [start, stop). The serializer
+    # collects it and densifies on the driver, and NULL-skipping
+    # aggregations consume it directly (missing row == NULL row for those
+    # folds); either way the densify shuffle is skipped. Any transform
+    # invalidates it (with_df/map_value/map_name clear it).
     raw_df: DataFrame | None = None
     # render hints set by the graph-decorator functions (color/alpha/
     # lineWidth/dashed/drawAsInfinite/stacked/secondYAxis) and consumed by
@@ -102,14 +111,21 @@ class SeriesFrame:
         return spark.range(self.start, self.stop, self.step).withColumnRenamed("id", TS)
 
     def densify(self, start: int | None = None, stop: int | None = None) -> "SeriesFrame":
-        """Materialize NULL rows for every missing (series, bucket).
+        """Materialize NULL rows for every missing (series, bucket), in the
+        plan.
 
         One hash aggregation by series (``ord``) collecting a ts->value map,
         then an inline spine explode with map lookup. Exactly ONE shuffle —
         and its partitioning (hash(ord)) is what downstream
         ``Window.partitionBy(ord)`` operators need, so a fetch → densify →
         window pipeline runs with no further exchange. Map size per series
-        is bounded by the request's point count.
+        is bounded by the request's point count; a duplicated (ord, ts)
+        fails the job with ``DUPLICATED_MAP_KEY``.
+
+        The result keeps the pre-densification plan as ``raw_df``: a
+        terminal frame is collected from it and densified on the driver
+        (``render.serialize.collect_series``), so the shuffle runs only
+        when an operator reads ``df``.
         """
         start = self.start if start is None else start
         stop = self.stop if stop is None else stop
@@ -117,17 +133,15 @@ class SeriesFrame:
             return self
         if stop <= start:
             return replace(self, start=start, stop=stop, dense=True)
-        per_series = (self.df
-                      .groupBy(ORD)
-                      .agg(F.first(NAME, ignorenulls=True).alias(NAME),
-                           F.map_from_entries(
-                               F.collect_list(F.struct(F.col(TS),
-                                                       F.col(VALUE)))).alias("__pts")))
-        spine = F.sequence(F.lit(start), F.lit(stop - self.step), F.lit(self.step))
-        df = (per_series
-              .select(NAME, ORD, F.explode(spine).alias(TS), F.col("__pts"))
-              .select(NAME, ORD, F.col(TS).cast("long"),
-                      F.try_element_at(F.col("__pts"), F.col(TS)).alias(VALUE)))
+        per_series = self.df.groupBy(ORD).agg(
+            F.expr(f"first({NAME}, true) AS {NAME}"),
+            F.expr(f"map_from_entries(collect_list(struct({TS}, {VALUE}))) "
+                   f"AS __pts"))
+        df = per_series.selectExpr(
+            NAME, ORD,
+            f"inline(transform(sequence({start}L, {stop - self.step}L, "
+            f"{self.step}L), t -> struct(t AS {TS}, "
+            f"try_element_at(__pts, t) AS {VALUE})))")
         return replace(self, df=df, start=start, stop=stop, dense=True,
                        raw_df=self.raw_df if self.dense else self.df)
 

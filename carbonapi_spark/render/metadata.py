@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from carbonapi_spark.model.series import NAME
 from carbonapi_spark.parser.globs import glob_to_java_regex
-from carbonapi_spark.sources.lake import SeriesLake, tags_expr
+from carbonapi_spark.sources.lake import SeriesLake, tag_predicate, tags_expr
 
 
 def find(lake: SeriesLake, query: str) -> list[dict]:
@@ -70,17 +70,15 @@ def _expr_filtered(lake: SeriesLake, exprs: list[str] | None):
     (the graphite-web autocomplete ``expr=`` params; the reference proxies
     them verbatim to the backend's /tags endpoints,
     zipper/types/interface.go:29-30)."""
-    from carbonapi_spark.sources.lake import tag_predicate
-
     df = lake.df
     for spec in exprs or []:
-        df = df.where(tag_predicate(spec, tags_expr(F.col(NAME))))
+        df = df.where(tag_predicate(spec))
     return df
 
 
 def tag_names(lake: SeriesLake, prefix: str = "", limit: int = 100,
               exprs: list[str] | None = None) -> list[str]:
-    tags = tags_expr(F.col(NAME))
+    tags = tags_expr()
     df = (_expr_filtered(lake, exprs)
           .select(F.explode(F.map_keys(tags)).alias("k")).distinct())
     if prefix:
@@ -90,7 +88,7 @@ def tag_names(lake: SeriesLake, prefix: str = "", limit: int = 100,
 
 def tag_values(lake: SeriesLake, tag: str, value_prefix: str = "",
                limit: int = 100, exprs: list[str] | None = None) -> list[str]:
-    tags = tags_expr(F.col(NAME))
+    tags = tags_expr()
     df = (_expr_filtered(lake, exprs)
           .select(tags.getItem(tag).alias("v"))
           .where(F.col("v").isNotNull()).distinct())

@@ -6,6 +6,12 @@ upstream is lazy DataFrame algebra, and maxDataPoints consolidation happens
 data crossing the driver boundary is already capped at
 ``maxDataPoints * n_series`` points.
 
+Densification of a terminal frame happens here, on the driver: a frame
+that still carries its pre-densification plan (``SeriesFrame.raw_df``) is
+collected sparse and assembled into dense vectors, so a plain fetch runs
+as one Spark job with no exchange.  Frames whose operators read ``df``
+were densified in the plan and are collected as they are.
+
 Formats (reference ``expr/types/types.go``):
 - JSON  (types.go:120-199): ``[{"target","datapoints":[[v,ts]...],"tags"}]``
 - CSV   (types.go:48-86):   ``"name",YYYY-MM-DD HH:MM:SS,value``
@@ -20,8 +26,6 @@ import json
 import math
 import pickle
 from dataclasses import dataclass
-
-from pyspark.sql import functions as F
 
 from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
 
@@ -67,13 +71,22 @@ def consolidate_for_points(frame: SeriesFrame, max_data_points: int) -> SeriesFr
 
 def collect_series(frame: SeriesFrame, max_data_points: int = 0) -> list[SeriesResult]:
     """Execute the plan once; return dense per-series vectors ordered by the
-    stable series order (``ord``)."""
+    stable series order (``ord``).
+
+    While ``raw_df`` is set, ``df`` is exactly ``densify(raw_df)``, so the
+    sparse plan is collected and the gaps filled here, by the
+    ``range(start, stop, step)`` assembly every frame goes through anyway.
+    A duplicated (ord, ts) raises, as densify's ``DUPLICATED_MAP_KEY``
+    does in the plan."""
     frame = consolidate_for_points(frame, max_data_points)
-    rows = frame.df.select(NAME, ORD, TS, VALUE).collect()
+    src = frame.df if frame.raw_df is None else frame.raw_df
     by_series: dict[tuple, dict] = {}
-    for r in rows:
-        key = (r[ORD], r[NAME])
-        by_series.setdefault(key, {})[r[TS]] = r[VALUE]
+    for name, ord_, ts, value in src.select(NAME, ORD, TS, VALUE).collect():
+        pts = by_series.setdefault((ord_, name), {})
+        if ts in pts:
+            raise ValueError(f"[DUPLICATED_MAP_KEY] duplicate point at "
+                             f"ts={ts} in series {name!r}")
+        pts[ts] = value
     out = []
     for (ord_, name) in sorted(by_series):
         pts = by_series[(ord_, name)]

@@ -18,8 +18,10 @@ fetches, we own a long Parquet table
 - tag queries (``seriesByTag``) -> predicates over tags parsed from the
   ``;k=v`` name suffix (``expr/tags/helper.go:160`` semantics).
 
-Fetched frames are densified so downstream operators see the reference's
-dense-vector invariant (gap == NULL row).
+All three are SQL text with the pattern's values as escaped literals.
+Fetched frames carry the densified plan as ``df`` so downstream operators
+see the reference's dense-vector invariant (gap == NULL row), and the
+scan itself as ``raw_df`` for the consumers that densify elsewhere.
 """
 
 from __future__ import annotations
@@ -36,28 +38,40 @@ from carbonapi_spark.parser.globs import (
 )
 
 
-def tags_expr(name: Column) -> Column:
-    """MAP<STRING,STRING> of graphite tags from ``base;k=v;k2=v2`` names.
+def sql_str(s: str) -> str:
+    """*s* as a Spark SQL string literal.
 
-    The ``name`` tag always exists and holds the base (tags/helper.go:160).
-    """
-    parts = F.split(name, ";")
-    kvs = F.filter(F.slice(parts, 2, F.greatest(F.size(parts) - 1, F.lit(0))),
-                   lambda s: s.contains("="))
-    entries = F.transform(
-        kvs, lambda s: F.struct(F.split_part(s, F.lit("="), F.lit(1)).alias("key"),
-                                F.substring_index(s, "=", -1).alias("value")))
-    base_entry = F.array(F.struct(F.lit("name").alias("key"),
-                                  F.element_at(parts, 1).alias("value")))
-    return F.map_from_entries(F.concat(base_entry, entries))
+    Every backslash and quote is escaped, so no input can end the literal
+    early: fetch patterns come straight from the HTTP ``target``.  (The
+    lexer reads ``\\'`` as part of the literal whatever
+    ``spark.sql.parser.escapedStringLiterals`` says; the values match as
+    written under its default, ``false``.)"""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# SQL text of the MAP<STRING,STRING> of graphite tags of the
+# ``base;k=v;k2=v2`` names in the ``name`` column; the ``name`` tag always
+# exists and holds the base (tags/helper.go:160)
+_PARTS = f"split({NAME}, ';')"
+TAGS_SQL = (f"map_from_entries(concat("
+            f"array(struct('name' AS key, element_at({_PARTS}, 1) AS value)), "
+            f"transform(filter(slice({_PARTS}, 2, greatest(size({_PARTS}) - 1, 0)), "
+            f"s -> contains(s, '=')), "
+            f"s -> struct(split_part(s, '=', 1) AS key, "
+            f"substring_index(s, '=', -1) AS value))))")
+
+
+def tags_expr() -> Column:
+    """The tag map of the ``name`` column (``TAGS_SQL``) as a Column."""
+    return F.expr(TAGS_SQL)
 
 
 _TAG_TERM = re.compile(r"^\s*'([^']+)'\s*$|^\s*\"([^\"]+)\"\s*$")
 _TAG_EXPR = re.compile(r"^([^=!~]+)\s*(=~|!=~|!=|=)\s*(.*)$")
 
 
-def tag_predicate(spec: str, tags: Column) -> Column:
-    """One seriesByTag term -> boolean Column.
+def tag_predicate(spec: str) -> str:
+    """One seriesByTag term -> SQL boolean text over the ``name`` column.
 
     Grammar per ``expr/functions/seriesByTag/function.go:40``:
     ``tag=value`` exact (empty value matches missing tag), ``tag!=value``,
@@ -67,17 +81,17 @@ def tag_predicate(spec: str, tags: Column) -> Column:
     if not m:
         raise ValueError(f"bad seriesByTag term {spec!r}")
     key, op, val = m.group(1).strip(), m.group(2), m.group(3).strip()
-    tag = tags.getItem(key)
+    tag = f"{TAGS_SQL}[{sql_str(key)}]"
     if op == "=":
         if val == "":
-            return tag.isNull() | (tag == "")
-        return tag == val
+            return f"({tag} IS NULL OR {tag} = '')"
+        return f"{tag} = {sql_str(val)}"
     if op == "!=":
-        return tag.isNull() | (tag != val)
-    rx = val if val.startswith("^") else "^" + val
+        return f"({tag} IS NULL OR {tag} != {sql_str(val)})"
+    rx = sql_str(val if val.startswith("^") else "^" + val)
     if op == "=~":
-        return tag.isNotNull() & tag.rlike(rx)
-    return tag.isNull() | ~tag.rlike(rx)
+        return f"({tag} IS NOT NULL AND {tag} RLIKE {rx})"
+    return f"({tag} IS NULL OR NOT ({tag} RLIKE {rx}))"
 
 
 def glob_prefix(pattern: str) -> str:
@@ -114,8 +128,11 @@ class SeriesLake:
             time_partition_col in df.columns else None)
         self.time_partition_seconds = time_partition_seconds
 
-    def _name_predicate(self, pattern: str) -> Column:
-        name = F.col(NAME)
+    def _name_predicate(self, pattern: str) -> str:
+        """SQL text of the predicate on ``name`` that *pattern* selects.
+
+        Every pattern-derived value enters as an escaped literal
+        (``sql_str``), so a pattern can only ever match names."""
         if pattern.startswith("seriesByTag(") and pattern.endswith(")"):
             inner = pattern[len("seriesByTag("):-1]
             terms = []
@@ -129,34 +146,36 @@ class SeriesLake:
                     # instead of building the whole tag map per scanned row,
                     # with a prefix guard that pushes down to Parquet as
                     # StringStartsWith (the map expression never would)
-                    val = tm.group(3).strip()
-                    terms.append(
-                        name.startswith(val) &
-                        (F.split_part(name, F.lit(";"), F.lit(1)) == val))
+                    val = sql_str(tm.group(3).strip())
+                    terms.append(f"(startswith({NAME}, {val}) AND "
+                                 f"split_part({NAME}, ';', 1) = {val})")
                 else:
-                    terms.append(tag_predicate(term, tags_expr(name)))
-            pred = terms[0]
-            for t in terms[1:]:
-                pred = pred & t
-            return pred
+                    terms.append(tag_predicate(term))
+            return " AND ".join(terms)
         if not has_wildcard(pattern):
-            return name == pattern
+            return f"{NAME} = {sql_str(pattern)}"
         exact = expand_braces(pattern)
         if exact is not None:
             # brace-only alternation -> IN, which (unlike rlike) reaches the
             # Parquet row-group filters as an In pushed filter
-            return name.isin(exact)
-        pred = name.rlike(glob_to_java_regex(pattern))
+            return f"{NAME} IN ({', '.join(map(sql_str, exact))})"
+        pred = f"{NAME} RLIKE {sql_str(glob_to_java_regex(pattern))}"
         prefix = glob_prefix(pattern)
         if prefix:
             # startswith IS pushed to Parquet (StringStartsWith filter);
             # rlike is evaluated post-scan, so this prunes row groups.
-            pred = name.startswith(prefix) & pred
+            pred = f"startswith({NAME}, {sql_str(prefix)}) AND {pred}"
         return pred
 
     def fetch(self, spark, pattern: str, from_ts: int, until_ts: int,
               *, densify: bool = True) -> SeriesFrame:
-        """Series matching *pattern* with buckets covering [from, until)."""
+        """Series matching *pattern* with buckets covering [from, until).
+
+        The scan is one SQL-text ``where`` (name, time range and, on a
+        time-partitioned lake, the partition range) and one ``selectExpr``.
+        With ``densify`` the frame's ``df`` is the densified plan and its
+        ``raw_df`` this scan; terminal frames collect the scan and fill
+        gaps on the driver (``render.serialize.collect_series``)."""
         step = self.step
         if self.per_series_step:
             step = self._common_step(pattern, until_ts)
@@ -164,13 +183,13 @@ class SeriesLake:
         stop = until_ts + (-until_ts) % step
         if stop <= start:
             stop = start + step
-        df = (self.df
-              .where(self._name_predicate(pattern))
-              .where((F.col(TS) >= start) & (F.col(TS) < stop)))
+        cond = f"({self._name_predicate(pattern)}) AND {TS} >= {start} " \
+               f"AND {TS} < {stop}"
         if self.time_partition_col:
             w = self.time_partition_seconds
-            df = df.where(F.col(self.time_partition_col)
-                          .between(start - start % w, stop - 1))
+            cond += (f" AND `{self.time_partition_col}` "
+                     f"BETWEEN {start - start % w} AND {stop - 1}")
+        df = self.df.where(cond)
         if self.per_series_step:
             # rescale every series to the LCM step: bucket each raw point
             # and fold with the default consolidation (average, NULL-skipped
@@ -180,8 +199,9 @@ class SeriesLake:
                   .agg(agg_column("average", F.col(VALUE), F.col(TS), 0.0)
                        .cast("double").alias(VALUE)))
         else:
-            df = df.select(F.col(NAME), F.col(NAME).alias(ORD),
-                           F.col(TS).cast("long"), F.col(VALUE).cast("double"))
+            df = df.selectExpr(NAME, f"{NAME} AS {ORD}",
+                               f"CAST({TS} AS BIGINT) AS {TS}",
+                               f"CAST({VALUE} AS DOUBLE) AS {VALUE}")
         frame = SeriesFrame(df, step, start, stop)
         return frame.densify() if densify else frame
 
@@ -193,8 +213,8 @@ class SeriesLake:
         table instead of re-deriving it from the data scan; the plan shape
         (scan → partial distinct → 1-row result) is the same either way.
         """
-        rows = (self.df.where(self._name_predicate(pattern))
-                .where(F.col(TS) < until_ts)
+        rows = (self.df
+                .where(f"({self._name_predicate(pattern)}) AND {TS} < {until_ts}")
                 .select("step").distinct().collect())
         step = 1
         for r in rows:

@@ -4900,8 +4900,13 @@ def test_read_index_table_matches_default_read_and_restores_conf(
     assert got.schema == ref.schema
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, ref.collect()))
+    # a real local directory, so the driver-listing branch sets the
+    # threshold, and a corrupt file, so the read fails after it did
+    bad = tmp_path / "grid_corrupt" / "cell=0"
+    bad.mkdir(parents=True)
+    (bad / "part-0.parquet").write_bytes(b"not a parquet file")
     with pytest.raises(Exception):
-        read_index_table(spark, str(tmp_path / "grid_missing_subdir"))
+        read_index_table(spark, str(tmp_path / "grid_corrupt"))
     assert spark.conf.get(key) == before, \
         "threshold must be restored on error too"
 
@@ -4935,3 +4940,22 @@ def test_partition_stats_lazy_df_footer_and_fallback(spark, tmp_path):
     assert built, "fallback materializes the callable"
     assert sorted((r["k"], r["__n"]) for r in per) == \
         sorted((r["k"], r["__n"]) for r in ref)
+
+
+
+def test_partition_stats_callable_without_schema_raises(spark, tmp_path):
+    """A callable df without ``schema`` is a misuse: it raises TypeError
+    instead of silently falling back to the full distributed scan."""
+    from carbonapi_spark.datapipe import maintenance as M
+    p = str(tmp_path / "t")
+    (spark.range(12).select((F.col("id") % 3).alias("k"), F.col("id"))
+     .write.partitionBy("k").parquet(p))
+    built = []
+
+    def mk():
+        built.append(1)
+        return spark.read.parquet(p)
+
+    with pytest.raises(TypeError, match="schema"):
+        M._partition_stats(spark, p, mk, ["k"])
+    assert not built

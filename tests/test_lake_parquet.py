@@ -261,3 +261,74 @@ def test_expire_tier_drops_aged_partitions(spark, tmp_path):
     assert expire_tier(spark, p, retention_s=2 * 86400, now=now) == []
     # missing path is a no-op
     assert expire_tier(spark, str(tmp_path / "nope"), 1, now=now) == []
+
+
+# names carrying SQL quotes, backslashes, regex metacharacters and an
+# injection attempt; the decoys would match if any of them leaked into the
+# query text unescaped
+_TRICKY = ["a') OR (true", "q'uote.x", "back\\slash.x", "meta.a+b(c)|d^$"]
+_TAGGED = ["cpu.load;host=a'b", "cpu.load;host=ab", "cpu.load;host=x"]
+_DECOYS = ["web.h1.cpu", "qquote.x", "back.x", "backslash.x",
+           "meta.aab(c)", "meta.ab(c)|d^$"]
+
+
+@pytest.fixture(scope="module")
+def tricky_lake(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("lake") / "tricky")
+    names = _TRICKY + _TAGGED + _DECOYS
+    rows = [(n, t * 60, float(i)) for i, n in enumerate(names)
+            for t in range(3)]
+    spark.createDataFrame(rows, "name STRING, ts BIGINT, value DOUBLE") \
+        .write.mode("overwrite").parquet(path)
+    return SeriesLake(spark.read.parquet(path), 60)
+
+
+@pytest.mark.parametrize("pattern,want", [
+    # exact
+    ("a') OR (true", {"a') OR (true"}),
+    ("q'uote.x", {"q'uote.x"}),
+    ("back\\slash.x", {"back\\slash.x"}),
+    ("meta.a+b(c)|d^$", {"meta.a+b(c)|d^$"}),
+    ("x') OR (true", set()),
+    ("x' OR '1'='1", set()),
+    # brace
+    ("{a') OR (true,q'uote.x}", {"a') OR (true", "q'uote.x"}),
+    ("{back\\slash.x,nothing}", {"back\\slash.x"}),
+    ("{x') OR (true,y}", set()),
+    # glob
+    ("q'uote.*", {"q'uote.x"}),
+    ("back\\slash.*", {"back\\slash.x"}),
+    ("meta.a+b(c)|d^*", {"meta.a+b(c)|d^$"}),
+    ("a') OR (*", {"a') OR (true"}),
+    ("*') OR ('1'='1", set()),
+    # seriesByTag
+    ("seriesByTag(\"host=a'b\")", {"cpu.load;host=a'b"}),
+    ("seriesByTag('name=cpu.load', \"host=~a'\")", {"cpu.load;host=a'b"}),
+    ("seriesByTag('name=cpu.load', \"host!=a'b\")",
+     {"cpu.load;host=ab", "cpu.load;host=x"}),
+    ("seriesByTag(\"name=a') OR (true\")", {"a') OR (true"}),
+    ("seriesByTag(\"name=back\\slash.x\")", {"back\\slash.x"}),
+    ("seriesByTag(\"host=x') OR (true\")", set()),
+])
+def test_patterns_cannot_change_the_query(spark, tricky_lake, pattern, want):
+    """Fetch patterns come straight from the HTTP target and enter the scan
+    as SQL text: quotes, backslashes, regex metacharacters and injection
+    attempts must match only the literal series, through fetch and through
+    /info (both read ``_name_predicate``)."""
+    from carbonapi_spark.render.metadata import info
+    frame = tricky_lake.fetch(spark, pattern, 0, 180, densify=False)
+    assert {r["name"] for r in frame.df.select("name").distinct()
+            .collect()} == want
+    assert set(info(tricky_lake, pattern)) == want
+
+
+@pytest.mark.parametrize("query,want", [
+    ("a') OR (true", ["a') OR (true"]),
+    ("q'uote.*", ["q'uote.x"]),
+    ("back\\slash.*", ["back\\slash.x"]),
+    ("meta.a+b(c)|d^*", ["meta.a+b(c)|d^$"]),
+    ("*') OR ('1'='1", []),
+])
+def test_find_matches_only_literal_names(tricky_lake, query, want):
+    from carbonapi_spark.render.metadata import find
+    assert [e["id"] for e in find(tricky_lake, query)] == want

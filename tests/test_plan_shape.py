@@ -4,6 +4,8 @@ plans so a refactor that silently doubles the shuffles fails CI."""
 
 import re
 
+import pytest
+
 from carbonapi_spark.evaluator import EvalContext, eval_target
 from tests.conftest import make_lake
 
@@ -38,6 +40,79 @@ def test_aggregation_shuffle_budget(spark):
     assert _exchanges(spark, lake, "sumSeries(m.*)", 0, 2) <= 3
     # order-sensitive fold -> dense path (densify + agg over full data)
     assert _exchanges(spark, lake, "diffSeries(m.a, m.b)", 0, 2) <= 3
+
+
+@pytest.fixture(scope="module")
+def day_lake(spark, tmp_path_factory):
+    """A day-partitioned Parquet lake, laid out like the served one."""
+    from pyspark.sql import functions as F
+
+    from carbonapi_spark.sources.lake import SeriesLake
+    path = str(tmp_path_factory.mktemp("lake") / "days")
+    rows = [(f"srv.h{h}.cpu.{m}", d * 86400 + i * 600, float(i))
+            for d in range(2) for h in range(3) for m in ("user", "sys")
+            for i in range(144) if (h + i) % 7]
+    (spark.createDataFrame(rows, "name STRING, ts BIGINT, value DOUBLE")
+     .withColumn("day", F.col("ts") - F.col("ts") % 86400)
+     .write.mode("overwrite").partitionBy("day").parquet(path))
+    return SeriesLake(spark.read.parquet(path), 600, time_partition_col="day")
+
+
+@pytest.mark.parametrize("pattern,n_series", [("srv.h1.cpu.user", 1),
+                                              ("srv.h*.cpu.sys", 3)])
+def test_fetch_serialize_is_one_job_no_exchange(spark, day_lake, pattern,
+                                                n_series):
+    """fetch -> collect_series collects the sparse scan and densifies on
+    the driver: one Spark job with one stage, and no Exchange in the plan
+    it runs."""
+    from carbonapi_spark.render.serialize import collect_series
+    frame = day_lake.fetch(spark, pattern, 86400 + 3600, 86400 + 4 * 3600)
+    plan = frame.raw_df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    sc = spark.sparkContext
+    group = f"fetch-serialize-one-job:{pattern}"
+    sc.setJobGroup(group, "fetch -> collect_series")
+    try:
+        series = collect_series(frame)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup("default", "")
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+    assert len(series) == n_series
+    assert all(len(s.values) == 18 for s in series)
+    # gaps come back as None, exactly as the in-plan densify fills them
+    dense = {(r["name"], r["ts"]): r["value"] for r in frame.df.collect()}
+    for s in series:
+        assert s.values == [dense[(s.name, s.start + i * s.step)]
+                            for i in range(len(s.values))]
+    assert any(v is None for s in series for v in s.values)
+
+
+@pytest.mark.parametrize("pattern", ["srv.h1.cpu.user", "srv.h*.cpu.sys",
+                                     "srv.{h0,h2}.cpu.user",
+                                     "seriesByTag('name=srv.h1.cpu.user')"])
+def test_fetch_py4j_sends_budget(spark, day_lake, pattern):
+    """Building a fetch (scan predicate, projection and the densified
+    plan) stays within 60 py4j sends: its prologue is SQL text."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+    release = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    sends = []
+    orig = ClientServerConnection.send_command
+
+    def counting(conn, command, *a, **k):
+        # object releases run whenever Python's GC does: not the fetch's
+        if not command.startswith(release):
+            sends.append(command)
+        return orig(conn, command, *a, **k)
+
+    ClientServerConnection.send_command = counting
+    try:
+        day_lake.fetch(spark, pattern, 86400, 86400 + 3600)
+    finally:
+        ClientServerConnection.send_command = orig
+    assert 0 < len(sends) <= 60, len(sends)
 
 
 def _df_exchanges(df) -> int:

@@ -97,6 +97,26 @@ def test_tag_autocomplete(spark):
     assert tag_values(lake, "host", exprs=["dc="]) == ["h1"]
 
 
+def test_duplicate_point_fails_render(spark):
+    """A duplicated (name, ts) fails the render on every path, as densify's
+    ``map_from_entries`` does in the plan (DUPLICATED_MAP_KEY, an HTTP
+    500): the driver assembly of a plain fetch must not let the last value
+    win."""
+    from carbonapi_spark.sources.lake import SeriesLake
+    rows = [("m.a", 0, 1.0), ("m.a", 1, 2.0), ("m.a", 1, 5.0),
+            ("m.a", 2, 3.0)]
+    lake = SeriesLake(spark.createDataFrame(
+        rows, "name STRING, ts BIGINT, value DOUBLE"), 1)
+    # raw-served: the plain fetch is collected sparse
+    fetched = _frame(spark, lake, "m.a", 0, 3)
+    assert fetched.raw_df is not None
+    with pytest.raises(Exception, match="DUPLICATED_MAP_KEY"):
+        collect_series(fetched)
+    # densified in the plan: derivative reads df
+    with pytest.raises(Exception, match="DUPLICATED_MAP_KEY"):
+        collect_series(_frame(spark, lake, "derivative(m.a)", 0, 3))
+
+
 # ----------------------------------------------------------- HTTP e2e
 
 @pytest.fixture(scope="module")
