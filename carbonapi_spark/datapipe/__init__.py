@@ -168,12 +168,10 @@ def read_small_table(spark, path: str) -> list[dict]:
     values are identical either way (it is the same parquet)."""
     import glob as _glob
     import os as _os
+
+    from carbonapi_spark.datapipe.maintenance import _local_root
     p = str(path)
-    root = None
-    if p.startswith("file:"):
-        root = p[5:]
-    elif "://" not in p and p.startswith("/"):
-        root = p
+    root = _local_root(p)
     if root is not None:
         try:
             import pyarrow as pa

@@ -1,27 +1,40 @@
-"""Durable-index maintenance: compaction for the partitioned Parquet
-index layouts (ANN cells, MinHash bands, BM25 postings).
+"""Durable-index lifecycle: one build / append / compact / delete path
+for the three partitioned Parquet indexes (MinHash bands, IVF-PQ ANN
+cells, BM25 postings).
 
-All three durable indexes share the same operational exposure: their
-``append_*`` twins run in retried batch jobs (and, for ANN, a
-foreachBatch streaming sink), so an epoch replayed after a partial
-append leaves EXACT duplicate rows behind, and every append adds one
-file per touched partition — bounded per batch, cumulative over
-thousands.  Duplicates are exact by construction in every case (the
-quantizers / band parameters / tokenization are frozen at build time,
-so a replayed row re-derives identically), which makes key-based
-``dropDuplicates`` lossless.
+Every index is a directory of sub-tables, one of them a partitioned
+grid (``bands/band=*/bucket=*``, ``codes/cell=*``,
+``postings/bucket=*``) next to small metadata tables.  The lifecycle
+steps below are keyed by the table path and shared by all three kinds:
 
-``compact_partitioned`` is the shared kernel; the per-index wrappers
-(:func:`carbonapi_spark.datapipe.similarity.compact_ann_index`,
-:func:`carbonapi_spark.datapipe.dedup.compact_band_index`,
-:func:`carbonapi_spark.datapipe.retrieval.compact_text_index`) add the
-index-specific keys and side tables.
+- build: :func:`build_index` runs the independent sub-table writes
+  concurrently and removes every sub-table if any write fails;
+- append: :func:`append_delta` writes a delta into the grid (one file
+  per touched combo) or, with ``l0=True``, into the unpartitioned
+  ``<table>_l0`` side table (one file per append); probes read the
+  grid ∪ L0 under one predicate (:func:`union_l0`);
+- compact: :func:`compact_index` takes the ``_MAINTENANCE`` lock, folds
+  L0 into the grid through :func:`compact_partitioned` and removes it;
+- delete: :func:`delete_rows_partitioned` rewrites the grid without the
+  deleted ids, :func:`delete_from_l0` does the same for L0.
+
+Appends run in retried jobs (and a foreachBatch sink for ANN), so a
+replayed epoch leaves EXACT duplicate rows: the encoders' parameters
+are frozen at build time, so a replayed row re-derives identically and
+key-based ``dropDuplicates`` is lossless.  Rewrites stage at
+``<table>.compacting`` / ``.deleting`` and swap in with renames, and a
+crashed run's stage is recovered before the next rewrite.
+
+What stays per kind: the encoders (MinHash banding, IVF-PQ, BM25
+tokenize), the probes' scoring, ANN's cell-selective delete, and BM25's
+doclens/stats tables.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import threading
 
 from pyspark.sql import functions as F
 
@@ -155,11 +168,8 @@ def delete_rows_partitioned(spark, table_path: str, ids_df,
                                     partition_cols))
     keep = df.join(F.broadcast(ids_df), join_cols, "left_anti")
     tmp = f"{table_path}.deleting"
-    from carbonapi_spark.datapipe import combo_repartition
-    (combo_repartition(keep, partition_cols,
-                       df.sparkSession.sparkContext.defaultParallelism)
-     .write.mode("overwrite")
-     .partitionBy(*partition_cols).parquet(tmp))
+    write_partitioned(keep, tmp, partition_cols,
+                      spark.sparkContext.defaultParallelism, "overwrite")
     _ensure_readable(spark, tmp, df.schema)
     swap_in(spark, table_path, tmp, f"{table_path}.predelete",
             "delete_rows_partitioned")
@@ -212,6 +222,7 @@ def _footer_partition_stats(root: str, schema, partition_cols: list[str]):
     from urllib.parse import unquote
 
     import pyarrow.parquet as pq
+    footer_errors = _footer_errors()
     parsers = []
     for c in partition_cols:
         t = schema[c].dataType.simpleString()
@@ -247,7 +258,7 @@ def _footer_partition_stats(root: str, schema, partition_cols: list[str]):
         for f in pfs:
             try:
                 n = pq.read_metadata(_os.path.join(dirpath, f)).num_rows
-            except Exception:
+            except footer_errors:
                 return None
             if n == 0:
                 continue
@@ -260,15 +271,25 @@ def _footer_partition_stats(root: str, schema, partition_cols: list[str]):
             for combo, (n, nf) in sorted(stats.items())]
 
 
+def _footer_errors() -> tuple:
+    """What a parquet footer read raises for an unreadable or corrupt
+    file; the footer paths fall back to a Spark scan on these and let
+    anything else (a bug, a misuse) propagate."""
+    import pyarrow as pa
+    return (OSError, pa.ArrowException)
+
+
 def _local_root(path: str):
     """Local filesystem directory for ``path``, or None (remote)."""
     p = str(path)
     if p.startswith("file:"):
         p = p[5:]
     if "://" not in p and p.startswith("/"):
-        import os as _os
-        return p if _os.path.isdir(p) else None
+        return p if os.path.isdir(p) else None
     return None
+
+
+_DISCOVERY_CONF_LOCK = threading.Lock()
 
 
 def read_index_table(spark, path: str):
@@ -285,16 +306,22 @@ def read_index_table(spark, path: str):
     paths keep the default behavior — object-store listings are
     latency-bound and do benefit from the distributed path.  Scale:
     the threshold override is keyed to the bounded grid, not to this
-    host — a 100 TB index still has ≤combo-count directories."""
+    host — a 100 TB index still has ≤combo-count directories.
+
+    The conf is session-wide and probes call this from concurrent
+    request threads, so the set / read / restore runs under one
+    process-wide lock; unguarded, two overlapping reads can restore
+    each other's raised value and leave it set for the session."""
     if _local_root(path) is None:
         return spark.read.parquet(path)
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "8192")
-    try:
-        return spark.read.parquet(path)
-    finally:
-        spark.conf.set(key, old)
+    with _DISCOVERY_CONF_LOCK:
+        old = spark.conf.get(key)
+        spark.conf.set(key, "8192")
+        try:
+            return spark.read.parquet(path)
+        finally:
+            spark.conf.set(key, old)
 
 
 def _partition_stats(spark, table_path: str, df,
@@ -321,7 +348,7 @@ def _partition_stats(spark, table_path: str, df,
             per = _footer_partition_stats(root, schema, partition_cols)
             if per is not None:
                 return per
-        except Exception:
+        except _footer_errors():
             pass
     return _per_partition_stats(df() if callable(df) else df,
                                 partition_cols)
@@ -333,15 +360,13 @@ def table_row_count(spark, path: str, df=None) -> int:
     either way (a parquet footer's num_rows is authoritative)."""
     root = _local_root(path)
     if root is not None:
+        import pyarrow.parquet as pq
         try:
-            import os as _os
-
-            import pyarrow.parquet as pq
             return sum(
-                pq.read_metadata(_os.path.join(dp, f)).num_rows
-                for dp, _d, fs in _os.walk(root)
+                pq.read_metadata(os.path.join(dp, f)).num_rows
+                for dp, _d, fs in os.walk(root)
                 for f in fs if f.endswith(".parquet"))
-        except Exception:
+        except _footer_errors():
             pass
     return (df if df is not None
             else spark.read.parquet(path)).count()
@@ -410,21 +435,167 @@ def overwrite_partition_dirs(spark, table_path: str, stage: str,
     return moved
 
 
-def discard_failed_build(spark, path: str, subs: list[str]) -> None:
-    """Remove an index's sub-table directories after a FAILED overlapped
-    build (ADVICE r14): ``overlap_jobs`` runs the big data write and the
-    small metadata writes concurrently, so a failure of any one can
-    leave the others already committed — a half-built index whose stats
-    table reads as valid.  Deleting whatever landed makes a failed build
-    unambiguously absent, which is what the old serial form guaranteed
-    for the metadata tables.  Best-effort by design: it runs on the
-    failure path, and a cleanup error must not mask the build error."""
-    for s in subs:
-        try:
-            p, fs = _hpath(spark, f"{path}/{s}")
-            fs.delete(p, True)
-        except Exception:
-            pass
+def build_index(spark, path: str, subs: list[str], *writes) -> None:
+    """Run an index build's independent sub-table writes concurrently
+    (:func:`carbonapi_spark.datapipe.overlap_jobs`: the small metadata
+    jobs ride the big data write's scheduling tail).  A failure of any
+    one can leave the others committed — a half-built index whose stats
+    table reads as valid — so on failure every sub-table in ``subs`` is
+    removed and the error re-raised: a failed build is absent.  The
+    cleanup is best-effort, so a cleanup error cannot mask the build
+    error."""
+    from carbonapi_spark.datapipe import overlap_jobs
+    try:
+        overlap_jobs(*writes)
+    except BaseException:
+        for s in subs:
+            try:
+                p, fs = _hpath(spark, f"{path}/{s}")
+                fs.delete(p, True)
+            except Exception:
+                pass
+        raise
+
+
+def write_partitioned(df, table_path: str, partition_cols: list[str],
+                      n_combos: int, mode: str = "append") -> None:
+    """Write ``df`` into a partitioned grid with one file per touched
+    combo (:func:`carbonapi_spark.datapipe.combo_repartition`)."""
+    from carbonapi_spark.datapipe import combo_repartition
+    (combo_repartition(df, partition_cols, n_combos)
+     .write.mode(mode).partitionBy(*partition_cols).parquet(table_path))
+
+
+def l0_path(table_path: str) -> str:
+    """The L0 side table of a partitioned grid."""
+    return f"{table_path}_l0"
+
+
+def read_l0(spark, table_path: str):
+    """The L0 side table of ``table_path`` as a DataFrame, or None.
+
+    ``l0=True`` appends land there UNPARTITIONED, one file per append,
+    instead of one file in every grid combo the delta touches (a small
+    delta spreads over nearly all of them: SCALE.md r14 measured a 2 s
+    ANN stream adding 256 files per batch).  The partition columns ride
+    along as ordinary columns, so probes filter L0 with a pushed-down
+    predicate; compaction folds it into the grid and removes it, so an
+    absent L0 is the steady state.  The very first append creates the
+    directory before its commit lands; a read in that window sees no
+    L0, not UNABLE_TO_INFER_SCHEMA."""
+    from pyspark.errors import AnalysisException
+    p, fs = _hpath(spark, l0_path(table_path))
+    if not fs.exists(p):
+        return None
+    try:
+        return spark.read.parquet(l0_path(table_path))
+    except AnalysisException:
+        return None
+
+
+def _drop_l0(spark, table_path: str) -> None:
+    p, fs = _hpath(spark, l0_path(table_path))
+    fs.delete(p, True)
+    spark.catalog.refreshByPath(l0_path(table_path))
+
+
+def append_delta(df, table_path: str, partition_cols: list[str],
+                 n_combos: int, l0: bool) -> None:
+    """Append an encoded delta: into the grid, or with ``l0`` as ONE
+    file into the L0 side table (:func:`read_l0`).  The L0 write is
+    ``repartition(1)``, not ``coalesce(1)``: coalesce would pull the
+    whole encode into one task (~1.8x slower at 10M — SCALE.md r14);
+    the shuffle keeps the encode at input parallelism and only the
+    write is serial."""
+    if l0:
+        df.repartition(1).write.mode("append").parquet(l0_path(table_path))
+    else:
+        write_partitioned(df, table_path, partition_cols, n_combos)
+
+
+def union_l0(spark, table_path: str, main, cond=None, cols=None):
+    """``main`` (a read of the grid at ``table_path``) ∪ its L0 rows,
+    both restricted by the Column ``cond`` and projected to ``cols``
+    (default: ``main``'s columns).  On the grid ``cond`` prunes
+    partitions; on L0 it is a pushed-down parquet filter."""
+    if cond is not None:
+        main = main.where(cond)
+    if cols is not None:
+        main = main.select(*cols)
+    l0 = read_l0(spark, table_path)
+    if l0 is None:
+        return main
+    if cond is not None:
+        l0 = l0.where(cond)
+    return main.unionByName(l0.select(*(cols or main.columns)))
+
+
+def compact_index(spark, path: str, table: str, key_cols: list[str],
+                  partition_cols: list[str], fragmented_only: bool,
+                  op: str) -> dict:
+    """Compact the grid ``{path}/{table}`` under the index's
+    :func:`maintenance_lock`, folding its L0 side table into the same
+    pass (:func:`compact_partitioned` with ``extra_df``) and removing it
+    afterwards; ``l0_rows_folded`` is reported when a fold happened.  A
+    crash between the fold and the removal leaves the folded rows in
+    both places: exact duplicates that a retry removes."""
+    table_path = f"{path}/{table}"
+    with maintenance_lock(spark, path, op):
+        l0 = read_l0(spark, table_path)
+        n_l0 = (table_row_count(spark, l0_path(table_path), l0)
+                if l0 is not None else 0)
+        stats = compact_partitioned(spark, table_path, key_cols,
+                                    partition_cols, fragmented_only,
+                                    extra_df=l0, extra_rows=n_l0)
+        if l0 is not None:
+            _drop_l0(spark, table_path)
+            stats["l0_rows_folded"] = n_l0
+    return stats
+
+
+_STAGES = {"compact": (".compacting", ".precompact"),
+           "delete": (".deleting", ".predelete")}
+
+
+def rewrite_flat(spark, table_path: str, df, kind: str, op: str) -> None:
+    """Replace a small UNPARTITIONED table with ``df`` as one file:
+    staged at ``<table>.compacting`` / ``.deleting`` (``kind``) and
+    swapped in by :func:`swap_in`."""
+    stage, parked = (table_path + s for s in _STAGES[kind])
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    swap_in(spark, table_path, stage, parked, op)
+
+
+def delete_from_l0(spark, table_path: str, ids_df, key: str) -> int:
+    """Drop the ``ids_df`` rows (joined on ``key``) from the L0 side
+    table of ``table_path``, if it exists.  L0 is delta-sized, so this
+    is a plain rewrite; an L0 emptied entirely is removed (absent is
+    the steady state).  Returns rows deleted."""
+    l0 = read_l0(spark, table_path)
+    if l0 is None:
+        return 0
+    n_hit = l0.join(F.broadcast(ids_df), key).count()
+    if n_hit == 0:
+        return 0
+    keep = l0.join(F.broadcast(ids_df), key, "left_anti")
+    if keep.isEmpty():
+        _drop_l0(spark, table_path)
+    else:
+        rewrite_flat(spark, l0_path(table_path), keep, "delete",
+                     "delete_from_l0")
+    return n_hit
+
+
+def ids_frame(spark, ids, id_col: str, key: str, table):
+    """A delete set as a one-column DataFrame named ``key``: a Python
+    collection becomes a local relation typed like ``table()``'s
+    ``key`` column (``table`` is only called then); a DataFrame's
+    ``id_col`` is renamed."""
+    if isinstance(ids, (list, tuple, set)):
+        dt = table().schema[key].dataType.simpleString()
+        from carbonapi_spark.datapipe import local_df
+        return local_df(spark, [(i,) for i in sorted(ids)], f"`{key}` {dt}")
+    return ids.select(F.col(id_col).alias(key))
 
 
 def recover_staged_commit(spark, table_path: str, stage: str,

@@ -18,10 +18,13 @@ buckets of ``n_buckets`` no matter how large the corpus is.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from carbonapi_spark.datapipe import (combo_repartition, local_df,
-                                      read_small_table)
+from carbonapi_spark.datapipe import local_df, read_small_table
+from carbonapi_spark.datapipe.maintenance import (
+    assert_not_under_maintenance, build_index, compact_partitioned,
+    delete_rows_partitioned, ids_frame, maintenance_lock, read_index_table,
+    rewrite_flat, write_partitioned)
 
 from carbonapi_spark.datapipe.text import token_count, tokens
 
@@ -116,9 +119,6 @@ def write_text_index(df: DataFrame, path: str, text_col: str = "text",
     # (guide §2.4: the old separate agg was one more full corpus pass);
     # the independent postings write overlaps the doclens+stats chain
     # from a second driver thread (guide §2.6)
-    from pyspark.sql import Observation
-
-    from carbonapi_spark.datapipe import overlap_jobs
     obs = Observation()
     lengths = df.select(F.col(id_col).alias("doc_id"),
                         token_count(F.col(text_col)).cast("long")
@@ -129,25 +129,36 @@ def write_text_index(df: DataFrame, path: str, text_col: str = "text",
     def _doclens_then_stats():
         lengths.write.mode("overwrite").parquet(f"{path}/doclens")
         got = obs.get
-        local_df(df.sparkSession, [(got["n"], got["s"], n_buckets)],
-                 "n_docs LONG, sum_dl LONG, n_buckets INT") \
-            .coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+        _write_stats(df.sparkSession, path, got["n"], got["s"], n_buckets)
 
-    try:
-        overlap_jobs(
-            lambda: (combo_repartition(bucketed, ["bucket"], n_buckets)
-                     .write.mode("overwrite").partitionBy("bucket")
-                     .parquet(f"{path}/postings")),
-            _doclens_then_stats)
-    except BaseException:
-        # the overlapped doclens/stats chain may have committed before
-        # the postings write failed — a failed build must be
-        # unambiguously absent (ADVICE r14)
-        from carbonapi_spark.datapipe.maintenance import \
-            discard_failed_build
-        discard_failed_build(df.sparkSession, path,
-                             ["postings", "doclens", "stats"])
-        raise
+    build_index(
+        df.sparkSession, path, ["postings", "doclens", "stats"],
+        lambda: write_partitioned(bucketed, f"{path}/postings", ["bucket"],
+                                  n_buckets, "overwrite"),
+        _doclens_then_stats)
+
+
+def _write_stats(spark, path: str, n_docs, sum_dl, n_buckets) -> None:
+    """(Re)write the 1-row BM25 stats table."""
+    local_df(spark, [(n_docs, sum_dl, n_buckets)],
+             "n_docs LONG, sum_dl LONG, n_buckets INT") \
+        .coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+
+
+def _rewrite_doclens(spark, path: str, lens: DataFrame, kind: str,
+                     op: str) -> None:
+    """Replace doclens with ``lens`` and recompute stats FROM it: the
+    totals ride the rewrite job as observed metrics, and SUM over zero
+    rows is coalesced to 0, so an emptied index reads (0, 0), which
+    :func:`bm25_query_index` treats as match-nothing."""
+    obs = Observation()
+    rewrite_flat(spark, f"{path}/doclens",
+                 lens.observe(obs, F.count(F.lit(1)).alias("n"),
+                              F.coalesce(F.sum("dl"), F.lit(0)).alias("s")),
+                 kind, op)
+    n_buckets = read_small_table(spark, f"{path}/stats")[0]["n_buckets"]
+    got = obs.get
+    _write_stats(spark, path, got["n"], got["s"], n_buckets)
 
 
 def bm25_query_index(spark: SparkSession, path: str, query: str,
@@ -180,7 +191,6 @@ def bm25_query_index(spark: SparkSession, path: str, query: str,
                       .select(F.pmod(F.xxhash64("term"),
                                      F.lit(n_buckets)).cast("int")
                               .alias("b")).collect()})
-    from carbonapi_spark.datapipe.maintenance import read_index_table
     tf = (read_index_table(spark, f"{path}/postings")
           .where(F.col("bucket").isin(buckets)
                  & F.col("term").isin(qterms)))
@@ -320,54 +330,37 @@ def append_text_index(df: DataFrame, path: str, text_col: str = "text",
     equal a one-shot build over the union (idf/avgdl are pure functions
     of the merged postings and stats; pytest pins it).  Refuses loudly
     while a ``_MAINTENANCE`` marker is present."""
-    from carbonapi_spark.datapipe.maintenance import (
-        assert_not_under_maintenance)
     spark = df.sparkSession
     assert_not_under_maintenance(spark, path, "append_text_index")
     stats_row = read_small_table(spark, f"{path}/stats")[0]
     n_buckets = stats_row["n_buckets"]
-    # A REPLAYED append (the at-least-once pattern text_compact_probe
-    # exercises) re-tokenizes the identical delta twice over; the
-    # bucketed postings and the per-doc lengths are pure functions of
-    # (delta plan, n_buckets), so share them through the REQUEST-scoped
-    # scratch memo exactly like append_band_index/append_ann_index —
-    # the second append writes from the tracked tables instead of
-    # re-running the tokenize pipeline (r15; released at the request
-    # boundary, nothing crosses bench runs).  The replay still APPENDS
-    # its rows again — only the computation is shared, not the write.
+    # a replayed append shares the tokenize pipeline's output, not the
+    # write: the replay still appends its rows again
     from carbonapi_spark import scratch
-    params = ("text_delta", n_buckets, text_col, id_col)
-    hit = scratch.memo().get(params)
-    bucketed = lengths_base = None
-    if hit is not None:
-        try:
-            if df._jdf.queryExecution().analyzed().sameResult(
-                    hit[0].queryExecution().analyzed()):
-                bucketed, lengths_base = hit[1], hit[2]
-        except Exception:
-            bucketed = lengths_base = None
-    if bucketed is None:
+
+    def _encode():
         tf = (df.select(F.col(id_col).alias("doc_id"),
                         F.explode(tokens(F.lower(F.col(text_col))))
                         .alias("term"))
               .groupBy("doc_id", "term")
               .agg(F.count(F.lit(1)).alias("tf")))
-        bucketed = scratch.track(tf.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")))
-        lengths_base = scratch.track(
-            df.select(F.col(id_col).alias("doc_id"),
-                      token_count(F.col(text_col)).cast("long")
-                      .alias("dl")))
-        scratch.memo()[params] = (df._jdf, bucketed, lengths_base)
+        return (scratch.track(tf.withColumn(
+                    "bucket",
+                    F.pmod(F.xxhash64("term"), F.lit(n_buckets))
+                    .cast("int"))),
+                scratch.track(
+                    df.select(F.col(id_col).alias("doc_id"),
+                              token_count(F.col(text_col)).cast("long")
+                              .alias("dl"))))
+
+    bucketed, lengths_base = scratch.reuse(
+        ("text_delta", n_buckets, text_col, id_col), df, _encode)
     # delta totals ride the doclens append job as observed metrics
     # (guide §2.4: the old separate agg re-ran the tokenize pass); the
     # independent postings append overlaps the doclens+stats chain
     # from a second driver thread (guide §2.6).  The Observation is
     # PER-APPEND (each append merges its delta into the stats it read),
     # attached on top of the shared lengths table.
-    from pyspark.sql import Observation
-
     from carbonapi_spark.datapipe import overlap_jobs
     obs = Observation()
     lengths = lengths_base.observe(obs, F.count(F.lit(1)).alias("n"),
@@ -376,17 +369,12 @@ def append_text_index(df: DataFrame, path: str, text_col: str = "text",
     def _doclens_then_stats():
         lengths.write.mode("append").parquet(f"{path}/doclens")
         delta = obs.get
-        merged = local_df(
-            spark, [(stats_row["n_docs"] + delta["n"],
-                     stats_row["sum_dl"] + (delta["s"] or 0), n_buckets)],
-            "n_docs LONG, sum_dl LONG, n_buckets INT")
-        merged.coalesce(1).write.mode("overwrite") \
-            .parquet(f"{path}/stats")
+        _write_stats(spark, path, stats_row["n_docs"] + delta["n"],
+                     stats_row["sum_dl"] + (delta["s"] or 0), n_buckets)
 
     overlap_jobs(
-        lambda: (combo_repartition(bucketed, ["bucket"], n_buckets)
-                 .write.mode("append").partitionBy("bucket")
-                 .parquet(f"{path}/postings")),
+        lambda: write_partitioned(bucketed, f"{path}/postings", ["bucket"],
+                                  n_buckets),
         _doclens_then_stats)
 
 
@@ -395,42 +383,20 @@ def compact_text_index(spark, path: str,
     """Compact a :func:`write_text_index` artifact after a replayed
     ``append_text_index`` — the one durable index where replay
     duplicates CORRUPT scores, not just inflate storage: duplicate
-    postings double a term's accumulated tf contribution, duplicate
-    doclens rows skew nothing by themselves but the replayed stats
-    rewrite double-counts n_docs/sum_dl, shifting idf and avgdl for
-    every query.  Three repairs in one pass: postings deduped on
-    (doc_id, term) per bucket partition via the shared kernel
-    (``fragmented_only=True`` rewrites only >1-file buckets), doclens
-    deduped on doc_id (rewrite-in-place via staged parquet — it is
-    unpartitioned and append-fragmented), and stats recomputed FROM the
-    deduped doclens (the ground truth the merged totals drifted from).
-    Single-writer maintenance, same caveats as the kernel."""
-    from carbonapi_spark.datapipe.maintenance import (compact_partitioned,
-                                                      maintenance_lock,
-                                                      swap_in)
+    postings double a term's accumulated tf contribution, and the
+    replayed stats rewrite double-counts n_docs/sum_dl, shifting idf
+    and avgdl for every query.  Three repairs under one maintenance
+    lock: postings deduped on (doc_id, term) per bucket partition by
+    the shared kernel (the text index has no L0), doclens deduped on
+    doc_id, and stats recomputed FROM the deduped doclens."""
     with maintenance_lock(spark, path, "compact_text_index"):
         stats = compact_partitioned(spark, f"{path}/postings",
                                     ["doc_id", "term"], ["bucket"],
                                     fragmented_only)
-        from pyspark.sql import Observation
-        obs = Observation()
-        # the recomputed stats ride the doclens rewrite job as observed
-        # metrics (r14: the old shape re-read the swapped-in doclens
-        # for one more aggregation pass)
-        lens = spark.read.parquet(f"{path}/doclens") \
-            .dropDuplicates(["doc_id"]) \
-            .observe(obs, F.count(F.lit(1)).alias("n"),
-                     F.coalesce(F.sum("dl"), F.lit(0)).alias("s"))
-        stage = f"{path}/doclens.compacting"
-        lens.coalesce(1).write.mode("overwrite").parquet(stage)
-        swap_in(spark, f"{path}/doclens", stage,
-                f"{path}/doclens.precompact", "compact_text_index")
-        n_buckets = read_small_table(
-            spark, f"{path}/stats")[0]["n_buckets"]
-        got = obs.get
-        local_df(spark, [(got["n"], got["s"], n_buckets)],
-                 "n_docs LONG, sum_dl LONG, n_buckets INT") \
-            .coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+        _rewrite_doclens(spark, path,
+                         spark.read.parquet(f"{path}/doclens")
+                         .dropDuplicates(["doc_id"]),
+                         "compact", "compact_text_index")
     return stats
 
 
@@ -448,39 +414,15 @@ def delete_from_text_index(spark, path: str, doc_ids,
     schema-bearing empty placeholder (probes return no matches; stats
     become (0, 0)); appends into an emptied index resume the
     partitioned layout only after a rebuild."""
-    from carbonapi_spark.datapipe.maintenance import (
-        delete_rows_partitioned, maintenance_lock, swap_in)
-    if isinstance(doc_ids, (list, tuple, set)):
-        dt = spark.read.parquet(f"{path}/doclens") \
-            .schema["doc_id"].dataType.simpleString()
-        ids_df = local_df(spark, [(i,) for i in sorted(doc_ids)],
-                          f"doc_id {dt}")
-    else:
-        ids_df = doc_ids.select(F.col(id_col).alias("doc_id"))
+    ids_df = ids_frame(spark, doc_ids, id_col, "doc_id",
+                       lambda: spark.read.parquet(f"{path}/doclens"))
     with maintenance_lock(spark, path, "delete_from_text_index"):
         stats = delete_rows_partitioned(spark, f"{path}/postings",
                                         ids_df, ["doc_id"], ["bucket"])
-        from pyspark.sql import Observation
-        obs = Observation()
-        # SUM over zero rows is NULL — coalesce so deleting EVERY
-        # document leaves (0, 0), which bm25_query_index treats as
-        # match-nothing instead of crashing on float(None) (ADVICE
-        # r13 #5); the totals ride the doclens rewrite job as observed
-        # metrics (r14: one fewer pass over the survivors)
-        lens = (spark.read.parquet(f"{path}/doclens")
-                .join(F.broadcast(ids_df), "doc_id", "left_anti")
-                .observe(obs, F.count(F.lit(1)).alias("n"),
-                         F.coalesce(F.sum("dl"), F.lit(0)).alias("s")))
-        stage = f"{path}/doclens.deleting"
-        lens.coalesce(1).write.mode("overwrite").parquet(stage)
-        swap_in(spark, f"{path}/doclens", stage,
-                f"{path}/doclens.predelete", "delete_from_text_index")
-        n_buckets = read_small_table(
-            spark, f"{path}/stats")[0]["n_buckets"]
-        got = obs.get
-        local_df(spark, [(got["n"], got["s"], n_buckets)],
-                 "n_docs LONG, sum_dl LONG, n_buckets INT") \
-            .coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+        _rewrite_doclens(spark, path,
+                         spark.read.parquet(f"{path}/doclens")
+                         .join(F.broadcast(ids_df), "doc_id", "left_anti"),
+                         "delete", "delete_from_text_index")
     return stats
 
 

@@ -14,8 +14,12 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from carbonapi_spark.datapipe import (combo_repartition, expr_cached,
-                                      local_df, selectx)
+from carbonapi_spark.datapipe import expr_cached, local_df, selectx
+from carbonapi_spark.datapipe.maintenance import (
+    _ensure_readable, _hpath, append_delta, assert_not_under_maintenance,
+    build_index, compact_index, delete_from_l0, ids_frame, maintenance_lock,
+    overwrite_partition_dirs, read_index_table, recover_staged_commit,
+    union_l0, write_partitioned)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1211,37 +1215,25 @@ def write_ann_index(df: DataFrame, path: str,
     # every write task emits a file into every cell= directory
     # (n_tasks x n_cells small files — metadata death at lake scale);
     # with it each cell lands in exactly one shuffle partition
-    from carbonapi_spark.datapipe import overlap_jobs
-    try:
-        overlap_jobs(
-            lambda: combo_repartition(codes, ["cell"], len(centroids))
-            .write.mode("overwrite")
-            .partitionBy("cell").parquet(f"{path}/codes"),
-            lambda: local_df(
-                spark,
-                [(i + 1, c, l2_cells, residual)
-                 for i, c in enumerate(centroids)],
-                "cell INT, emb ARRAY<DOUBLE>, l2 BOOLEAN, residual BOOLEAN")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(f"{path}/centroids"),
-            lambda: local_df(
-                spark,
-                [(j, cw, list(map(float, codebooks[j][cw])))
-                 for j in range(len(codebooks))
-                 for cw in range(len(codebooks[j]))],
-                "m INT, code INT, sub ARRAY<DOUBLE>")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(f"{path}/codebooks"))
-    except BaseException:
-        # the overlapped metadata jobs may have committed before the
-        # codes write failed — a failed build must be unambiguously
-        # absent, not a half-index with valid-looking metadata (ADVICE
-        # r14)
-        from carbonapi_spark.datapipe.maintenance import \
-            discard_failed_build
-        discard_failed_build(spark, path,
-                             ["codes", "centroids", "codebooks"])
-        raise
+    build_index(
+        spark, path, ["codes", "centroids", "codebooks"],
+        lambda: write_partitioned(codes, f"{path}/codes", ["cell"],
+                                  len(centroids), "overwrite"),
+        lambda: local_df(
+            spark,
+            [(i + 1, c, l2_cells, residual)
+             for i, c in enumerate(centroids)],
+            "cell INT, emb ARRAY<DOUBLE>, l2 BOOLEAN, residual BOOLEAN")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(f"{path}/centroids"),
+        lambda: local_df(
+            spark,
+            [(j, cw, list(map(float, codebooks[j][cw])))
+             for j in range(len(codebooks))
+             for cw in range(len(codebooks[j]))],
+            "m INT, code INT, sub ARRAY<DOUBLE>")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(f"{path}/codebooks"))
 
 
 def read_ann_index(spark, path: str):
@@ -1249,7 +1241,6 @@ def read_ann_index(spark, path: str):
     :func:`write_ann_index`'s layout. Centroids/codebooks are
     model-sized (k x dim, m x ksub x dsub) — driver lists by design."""
     from carbonapi_spark.datapipe import read_small_table
-    from carbonapi_spark.datapipe.maintenance import read_index_table
     codes = read_index_table(spark, f"{path}/codes")
     crows = read_small_table(spark, f"{path}/centroids")
     crows.sort(key=lambda r: r["cell"])
@@ -1263,35 +1254,6 @@ def read_ann_index(spark, path: str):
     for r in sorted(brows, key=lambda r: (r["m"], r["code"])):
         codebooks[r["m"]].append(list(r["sub"]))
     return codes, centroids, codebooks, l2_cells, residual
-
-
-def _l0_delta(spark, path: str):
-    """The index's L0 side table (``{path}/codes_l0``), or None.
-
-    ``l0=True`` appends land here UNPARTITIONED, one file per batch —
-    the LSM-style answer to streaming-append fragmentation: a
-    cell-partitioned append writes one file into EVERY touched cell
-    per micro-batch (measured in SCALE.md r14: a 2 s-tick stream
-    fragments all 256 cells each batch — ~43k files/cell/day), while
-    an L0 batch is exactly ONE file regardless of cell spread.  The
-    ``cell`` assignment rides along as an ordinary column, so probes
-    filter it with a pushed-down predicate instead of partition
-    pruning — the right trade for a table that is delta-sized by
-    contract (compaction folds it into the cell layout and removes
-    it; an absent directory is the normal steady state)."""
-    from pyspark.errors import AnalysisException
-
-    from carbonapi_spark.datapipe.maintenance import _hpath
-    p, fs = _hpath(spark, f"{path}/codes_l0")
-    if not fs.exists(p):
-        return None
-    try:
-        return spark.read.parquet(f"{path}/codes_l0")
-    except AnalysisException:
-        # the very FIRST l0 append creates the directory before its
-        # parquet commits land (only _temporary inside) — a probe in
-        # that window must see "no L0 yet", not UNABLE_TO_INFER_SCHEMA
-        return None
 
 
 def _build_probe_rows(spark, query: DataFrame, cents, cbs, nprobe: int,
@@ -1393,7 +1355,6 @@ def ann_index_topk(spark, path: str, query: DataFrame, k: int = 10,
                          "index built with store_vectors=True, for the "
                          "exact rerank stage")
     dim = len(cents[0])
-    probe_df = None
     if query_tables == "driver":
         # ONE query collect serves both the pruning cell set and the
         # ADC probe tables (and skips parsing the n_centroids*dim- and
@@ -1404,58 +1365,24 @@ def ann_index_topk(spark, path: str, query: DataFrame, k: int = 10,
         cells = sorted({cell for _q, cell, _d in rows})
         probe_df = _probe_rows_df(spark, query, id_col, rows)
     else:
-        # ONE query-side job serves BOTH the pruning cell set and the
-        # ADC distance tables (r15): the old shape collected bare cells
-        # here and then re-CONSTRUCTED the whole literal-heavy query
-        # pipeline inside ivfpq_topk — ~20 eagerly-analyzed DataFrame
-        # ops over n_centroids*dim + m*ksub*dsub literal trees, twice.
-        # The dtab values come from the SAME SQL fold the inline plan
-        # evaluated, so every ADC distance is bit-identical (oracle-
-        # pinned); they just travel as DATA (nprobe x m x ksub doubles
-        # per query — query batches are small by the probe contract,
-        # which is why the cells collect was already driver-side).
-        # The probe rows are a pure function of (query plan, frozen
+        # the probe rows are a pure function of (query plan, frozen
         # quantizers, nprobe) — the codes table plays no part — so a
         # REPEATED probe within one request (ann_l0_probe probes the
-        # same query before and after compaction) reuses them through
-        # the request-scoped scratch memo instead of re-running the
-        # routing job (r15; released at the request boundary, nothing
-        # crosses bench runs).
+        # same query before and after compaction) reuses them instead
+        # of re-running the routing job
         from carbonapi_spark import scratch
-        memo_key = ("ann_probe_rows", id_col, vec_col, nprobe,
-                    l2_cells, residual,
-                    hash((tuple(map(tuple, cents)),
-                          tuple(tuple(map(tuple, cb)) for cb in cbs))))
-        hit = scratch.memo().get(memo_key)
-        if hit is not None:
-            try:
-                if not query._jdf.queryExecution().analyzed().sameResult(
-                        hit[0].queryExecution().analyzed()):
-                    hit = None
-            except Exception:
-                hit = None
-        if hit is not None:
-            probe_rows = hit[1]
-            cells = sorted({r["__cell"] for r in probe_rows})
-            probe_df = _probe_rows_df(
-                spark, query, id_col,
-                [(r["query_id"], r["__cell"], r["__dtab"])
-                 for r in probe_rows])
-        if probe_df is None:
-            probe_rows, cells, probe_df = _build_probe_rows(
-                spark, query, cents, cbs, nprobe, id_col, vec_col,
-                l2_cells, residual)
-            scratch.memo()[memo_key] = (query._jdf, probe_rows)
-    pruned = codes.where(F.col("cell").isin(cells))
-    l0 = _l0_delta(spark, path)
-    if l0 is not None:
-        # L0 rows carry cell as an ordinary column: the same isin
-        # filter is a pushed-down parquet predicate rather than
-        # partition pruning — fine for a delta-sized table, and the
-        # union keeps every downstream stage (dedupe, ADC scoring,
-        # stored-vector rerank) oblivious to where a row lives
-        pruned = pruned.unionByName(
-            l0.where(F.col("cell").isin(cells)).select(*pruned.columns))
+        _rows, cells, probe_df = scratch.reuse(
+            ("ann_probe_rows", id_col, vec_col, nprobe, l2_cells, residual,
+             hash((tuple(map(tuple, cents)),
+                   tuple(tuple(map(tuple, cb)) for cb in cbs)))),
+            query,
+            lambda: _build_probe_rows(spark, query, cents, cbs, nprobe,
+                                      id_col, vec_col, l2_cells,
+                                      residual))
+    # the union keeps every downstream stage (dedupe, ADC scoring,
+    # stored-vector rerank) oblivious to where a row lives
+    pruned = union_l0(spark, f"{path}/codes", codes,
+                      F.col("cell").isin(cells))
     if dedupe:
         pruned = pruned.dropDuplicates([id_col])
     if refine is not None and corpus is None:
@@ -1501,77 +1428,35 @@ def append_ann_index(df: DataFrame, path: str, id_col: str = "vec_id",
     """Add new vectors to an existing :func:`write_ann_index` layout
     WITHOUT rebuilding: encode the delta with the index's own stored
     centroids/codebooks (quantizers are frozen at build time — FAISS's
-    ``add`` semantics) and append the codes into the cell partitions.
-
-    The dense sibling of ``minhash_incremental``: ingest encodes only
-    the delta (one pass over the new vectors), the durable artifact
-    grows in place, and probe-time partition pruning is untouched
-    because appends land inside the same ``cell=`` directories.
+    ``add`` semantics) and append the codes into the cell partitions,
+    or with ``l0=True`` into the ``codes_l0`` side table
+    (:func:`carbonapi_spark.datapipe.maintenance.append_delta`).
     Quantizer drift is the operator's trade-off, exactly as with any
     IVF index — retrain + rewrite when recall decays.  Refuses loudly
-    while a ``_MAINTENANCE`` marker is present (a compaction/deletion
-    rename-swap would lose the appended rows silently).
+    while a ``_MAINTENANCE`` marker is present.
 
     Appending an id ALREADY IN THE INDEX is supported only as an exact
     replay (same embedding — the at-least-once case compaction
     collapses).  An upsert — same id, new embedding — is NOT:
     see the :func:`compact_ann_index` warning (the new copy can land
     in a different cell and survive compaction alongside the old one);
-    delete first, then append.
-
-    ``l0=True`` appends into the UNPARTITIONED ``codes_l0`` side table
-    instead — ONE file per append regardless of how many cells the
-    delta touches (a cell-partitioned append writes a file into every
-    touched cell, which for frequent small deltas fragments the whole
-    index: SCALE.md r14 measured a 2 s-tick stream adding 256
-    files/batch).  Probes read main ∪ L0 transparently
-    (:func:`_l0_delta`); :func:`compact_ann_index` folds L0 into the
-    cell layout and removes it.  The trade: L0 rows are not
-    partition-pruned at probe time, so keep L0 delta-sized and fold on
-    a schedule."""
-    from carbonapi_spark.datapipe.maintenance import (
-        assert_not_under_maintenance)
+    delete first, then append."""
     spark = df.sparkSession
     assert_not_under_maintenance(spark, path, "append_ann_index")
     codes, centroids, codebooks, l2_cells, residual = \
         read_ann_index(spark, path)
-    # replayed-append sharing through the request-scoped scratch memo
-    # (see append_band_index): the encoded delta is a pure function of
-    # (delta plan, frozen quantizers), so the second append of the same
-    # epoch reuses the tracked codes instead of re-running the encode
     from carbonapi_spark import scratch
     keep_vec = vec_col in codes.columns
-    params = ("ann_delta", encoder, id_col, vec_col, l2_cells, residual,
-              keep_vec,
-              hash((tuple(map(tuple, centroids)),
-                    tuple(tuple(map(tuple, cb)) for cb in codebooks))))
-    hit = scratch.memo().get(params)
-    delta = None
-    if hit is not None:
-        try:
-            if df._jdf.queryExecution().analyzed().sameResult(
-                    hit[0].queryExecution().analyzed()):
-                delta = hit[1]
-        except Exception:
-            delta = None
-    if delta is None:
-        enc = ivfpq_encode_arrow if encoder == "arrow" else ivfpq_encode
-        delta = scratch.track(
+    enc = ivfpq_encode_arrow if encoder == "arrow" else ivfpq_encode
+    delta = scratch.reuse(
+        ("ann_delta", encoder, id_col, vec_col, l2_cells, residual,
+         keep_vec,
+         hash((tuple(map(tuple, centroids)),
+               tuple(tuple(map(tuple, cb)) for cb in codebooks)))), df,
+        lambda: scratch.track(
             enc(df, codebooks, centroids, id_col, vec_col,
-                l2_cells=l2_cells, residual=residual, keep_vec=keep_vec))
-        scratch.memo()[params] = (df._jdf, delta)
-    if l0:
-        # repartition(1), NOT coalesce(1): coalesce collapses the
-        # whole chain into one task, serializing the encode matmuls
-        # (measured ~1.8x slower batch absorb at 10M — SCALE.md r14);
-        # the shuffle boundary keeps the encode at input parallelism
-        # and only the single write task is serial
-        delta.repartition(1).write.mode("append") \
-            .parquet(f"{path}/codes_l0")
-    else:
-        combo_repartition(delta, ["cell"], len(centroids)) \
-            .write.mode("append") \
-            .partitionBy("cell").parquet(f"{path}/codes")
+                l2_cells=l2_cells, residual=residual, keep_vec=keep_vec)))
+    append_delta(delta, f"{path}/codes", ["cell"], len(centroids), l0)
 
 
 def ann_auto_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
@@ -1639,7 +1524,6 @@ def ann_auto_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
     spark = corpus.sparkSession
     # prefer the stored-vector rerank (reads only probed cells); fall
     # back to the full-corpus gather when the index lacks vectors
-    from carbonapi_spark.datapipe.maintenance import read_index_table
     stored = vec_col in read_index_table(
         spark, f"{index_path}/codes").schema.fieldNames()
     return ann_index_topk(spark, index_path, query, k=k,
@@ -1653,15 +1537,13 @@ def compact_ann_index(spark, path: str, id_col: str = "vec_id",
                       fragmented_only: bool = False) -> dict:
     """Compact the codes table of a :func:`write_ann_index` artifact:
     collapse the exact duplicates an at-least-once replay can leave
-    behind (the :func:`stream_append_ann_index` failure mode) and merge
-    per-append small files back to ONE file per cell, preserving the
-    ``cell=`` partitioning that serves probe-time pruning.
-
-    Duplicates are exact by construction — the quantizers are frozen,
-    so a replayed row re-encodes to the identical (cell, codes[,
-    vector]) — which makes ``dropDuplicates([id])`` lossless: id ->
+    behind (the :func:`stream_append_ann_index` failure mode), merge
+    per-append small files back to ONE file per cell and fold
+    ``codes_l0`` in (:func:`carbonapi_spark.datapipe.maintenance.
+    compact_index`).  ``dropDuplicates([id])`` is lossless because id ->
     cell is a function of the frozen quantizers, so all copies of an id
-    live in the same cell and carry the same payload.
+    live in the same cell and carry the same payload.  Reports
+    ``cells_rewritten``.
 
     .. warning:: that invariant is also a CONTRACT on the caller:
        re-appending an EXISTING id with a *different* embedding (an
@@ -1675,63 +1557,9 @@ def compact_ann_index(spark, path: str, id_col: str = "vec_id",
        ``dedupe=True`` hides cross-cell duplicates until then.  An
        id-only dedupe would re-add the second, index-sized shuffle for
        a failure mode replays cannot produce (ADVICE r14 — documented
-       instead of paid).
-
-    ``fragmented_only=True`` is the lake-scale mode: only cells holding
-    MORE THAN ONE file are rewritten (appends always create new files,
-    so a one-file cell can hold no duplicates), via a staged write +
-    dynamic partition overwrite — untouched cells keep their original
-    files byte-for-byte, and the rewrite cost scales with the
-    fragmented fraction instead of the index size.  A crash mid-commit
-    can leave a MIX of compacted and uncompacted cells; each cell is
-    individually old-or-new, and since dedupe is idempotent a retry
-    simply finishes the job.
-
-    The default full rewrite lands at ``{path}/codes.compacting``
-    first, then swaps in with two filesystem renames (old codes parked
-    at ``codes.precompact`` until the new directory is in place, then
-    removed).  No state ever mixes old and new files; a crash BETWEEN
-    the two renames leaves ``codes`` briefly absent with the old data
-    intact at ``codes.precompact`` (rename it back to recover) — the
-    full transactional story needs a table format (Delta/Iceberg) and
-    is out of scope.  NEITHER mode is safe to run concurrently with
-    appends or probes: single-writer maintenance, like Parquet
-    compaction generally — ENFORCED since r14 by the ``_MAINTENANCE``
-    marker (:func:`carbonapi_spark.datapipe.maintenance.
-    maintenance_lock`): concurrent appends fail loudly instead of
-    losing rows.  Returns row/file counts before/after (files
-    counted via ``input_file_name()`` — the fragmentation metric
-    appends accumulate) plus ``cells_rewritten``.
-
-    When an L0 side table exists (``l0=True`` appends —
-    :func:`_l0_delta`), the same pass FOLDS it into the cell layout
-    and removes it: in ``fragmented_only`` mode every cell present in
-    L0 is rewritten (its rows must merge into that cell's directory),
-    plus whatever the main table fragmented.  A crash between the fold
-    commit and the L0 removal leaves the folded rows in both places —
-    exact duplicates that ``dedupe=True`` probes hide and a retry
-    removes durably.  ``l0_rows_folded`` is reported when a fold
-    happened.
-
-    Delegates to :func:`carbonapi_spark.datapipe.maintenance.
-    compact_partitioned` — the shared kernel behind the band-index and
-    text-index compactors."""
-    from carbonapi_spark.datapipe.maintenance import (_hpath,
-                                                      compact_partitioned,
-                                                      maintenance_lock,
-                                                      table_row_count)
-    with maintenance_lock(spark, path, "compact_ann_index"):
-        l0 = _l0_delta(spark, path)
-        n_l0 = (table_row_count(spark, f"{path}/codes_l0", l0)
-                if l0 is not None else 0)
-        stats = compact_partitioned(spark, f"{path}/codes", [id_col],
-                                    ["cell"], fragmented_only,
-                                    extra_df=l0, extra_rows=n_l0)
-        if l0 is not None:
-            lp, fs = _hpath(spark, f"{path}/codes_l0")
-            fs.delete(lp, True)
-            spark.catalog.refreshByPath(f"{path}/codes_l0")
-            stats["l0_rows_folded"] = n_l0
+       instead of paid)."""
+    stats = compact_index(spark, path, "codes", [id_col], ["cell"],
+                          fragmented_only, "compact_ann_index")
     stats["cells_rewritten"] = stats.pop("partitions_rewritten")
     return stats
 
@@ -1746,124 +1574,62 @@ def delete_from_ann_index(spark, path: str, ids, id_col: str = "vec_id",
     (deletion requests arrive as bare ids, so the id -> cell lookup
     cannot be partition-pruned; the scan reads two columns of the
     codes table and nothing else).  Only those cells are then
-    rewritten — anti-joined against the (broadcast) delete set — via a
-    staged write + dynamic partition overwrite, so untouched cells
-    keep their files byte-for-byte; a cell whose every row is deleted
-    is removed outright (dynamic overwrite only replaces partitions
-    present in the written data, so emptied cells need the explicit
-    directory delete).  The selectivity pays off for SMALL delete sets
-    (few affected cells — the common takedown shape); a large
-    scattered batch hashes into every cell and degrades to a full
-    rewrite (measured at 10M: a 100k-id batch touched all 256 cells —
-    SCALE.md r13).  Same single-writer caveat as
-    :func:`compact_ann_index`.  Returns
+    rewritten — anti-joined against the (broadcast) delete set — and
+    moved into place, so untouched cells keep their files
+    byte-for-byte; a cell whose every row is deleted is removed
+    outright.  The selectivity pays off for SMALL delete sets (few
+    affected cells — the common takedown shape); a large scattered
+    batch hashes into every cell and degrades to a full rewrite
+    (measured at 10M: a 100k-id batch touched all 256 cells —
+    SCALE.md r13).  ``codes_l0`` rows are deleted too.  Returns
     {"rows_deleted", "cells_rewritten", "cells_emptied"}.
 
     Deleting EVERY vector leaves the codes table as a single
     schema-bearing empty placeholder (probes return no candidates);
     appends into an emptied index resume the ``cell=`` layout only
     after a rebuild."""
-    from carbonapi_spark.datapipe.maintenance import (_hpath,
-                                                      maintenance_lock)
+    table = f"{path}/codes"
     with maintenance_lock(spark, path, "delete_from_ann_index"):
-        # the codes read must happen INSIDE the lock: its eager file
+        # finish (or discard) a crashed prior deletion's staged cells,
+        # then read the codes INSIDE the lock: the read's eager file
         # listing pins the rewrite's input, so a read taken before the
         # marker was up would let an append committing in between be
-        # silently erased by the cell rewrite — the exact lost-append
-        # the lock exists to prevent
-        from carbonapi_spark.datapipe.maintenance import \
-            read_index_table
-        codes = read_index_table(spark, f"{path}/codes")
-        if isinstance(ids, (list, tuple, set)):
-            id_dt = codes.schema[id_col].dataType.simpleString()
-            ids_df = local_df(spark, [(i,) for i in sorted(ids)],
-                              f"`{id_col}` {id_dt}")
-        else:
-            ids_df = ids.select(id_col)
-        return _delete_from_ann_index_locked(spark, path, codes,
-                                             ids_df, id_col)
-
-
-def _delete_from_ann_index_locked(spark, path, codes, ids_df,
-                                  id_col) -> dict:
-    from carbonapi_spark.datapipe.maintenance import (
-        _hpath, recover_staged_commit)
-    # finish (or discard) a crashed prior deletion's staged cells before
-    # planning this one — the codes read below must see the recovered
-    # table, not one missing a half-moved cell (ADVICE r14)
-    if recover_staged_commit(spark, f"{path}/codes",
-                             f"{path}/codes.deleting", ["cell"]):
-        from carbonapi_spark.datapipe.maintenance import read_index_table
-        codes = read_index_table(spark, f"{path}/codes")
-    l0_deleted = _delete_from_l0(spark, path, ids_df, id_col)
-    hit = codes.join(F.broadcast(ids_df), id_col)
-    per_cell = {r["cell"]: r["n"] for r in
-                hit.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-                .collect()}
-    if not per_cell:
-        return {"rows_deleted": l0_deleted, "cells_rewritten": 0,
-                "cells_emptied": 0}
-    cells = sorted(per_cell)
-    keep = (codes.where(F.col("cell").isin(cells))
-            .join(F.broadcast(ids_df), id_col, "left_anti"))
-    stage = f"{path}/codes.deleting"
-    (combo_repartition(keep, ["cell"], len(cells))
-     .write.mode("overwrite")
-     .partitionBy("cell").parquet(stage))
-    # commit by MOVING the staged cell dirs into place (r14: the old
-    # shape re-read the stage and re-shuffled it through a second
-    # dynamic-partition-overwrite Spark write, and paid one more job
-    # for a distinct() just to learn which cells survived — the staged
-    # directory listing already knows)
-    from carbonapi_spark.datapipe.maintenance import (
-        _ensure_readable, overwrite_partition_dirs)
-    moved = overwrite_partition_dirs(spark, f"{path}/codes", stage,
-                                     ["cell"])
-    kept_cells = {int(rel.split("=", 1)[1]) for rel in moved}
-    _, fs = _hpath(spark, stage)
-    emptied = [c for c in cells if c not in kept_cells]
-    for c in emptied:
-        dp, _ = _hpath(spark, f"{path}/codes/cell={c}")
-        fs.delete(dp, True)
-    # deleting EVERY vector removes every cell directory; leave a
-    # schema-bearing empty file so the table stays readable
-    # (probes then return no candidates instead of
-    # UNABLE_TO_INFER_SCHEMA)
-    _ensure_readable(spark, f"{path}/codes", codes.schema)
-    # the raw directory deletes bypass Spark's write path, so its
-    # file-status cache still lists the removed files — refresh, or the
-    # next probe dies with FAILED_READ_FILE.FILE_NOT_EXIST
-    spark.catalog.refreshByPath(f"{path}/codes")
-    return {"rows_deleted": int(sum(per_cell.values())) + l0_deleted,
-            "cells_rewritten": len(kept_cells & set(cells)),
-            "cells_emptied": len(emptied)}
-
-
-def _delete_from_l0(spark, path, ids_df, id_col) -> int:
-    """Drop ``ids_df`` rows from the L0 side table, if one exists.
-    L0 is delta-sized by contract, so this is a plain full rewrite
-    through a rename swap; an L0 emptied entirely is REMOVED (an
-    absent ``codes_l0`` is the normal steady state, so no
-    schema-bearing placeholder is needed).  Returns rows deleted."""
-    from carbonapi_spark.datapipe.maintenance import _hpath
-    l0 = _l0_delta(spark, path)
-    if l0 is None:
-        return 0
-    n_hit = l0.join(F.broadcast(ids_df), id_col).count()
-    if n_hit == 0:
-        return 0
-    lp, fs = _hpath(spark, f"{path}/codes_l0")
-    keep = l0.join(F.broadcast(ids_df), id_col, "left_anti")
-    if keep.isEmpty():
-        fs.delete(lp, True)
-        spark.catalog.refreshByPath(f"{path}/codes_l0")
-        return n_hit
-    from carbonapi_spark.datapipe.maintenance import swap_in
-    stage = f"{path}/codes_l0.deleting"
-    keep.coalesce(1).write.mode("overwrite").parquet(stage)
-    swap_in(spark, f"{path}/codes_l0", stage,
-            f"{path}/codes_l0.predelete", "_delete_from_l0")
-    return n_hit
+        # silently erased by the cell rewrite
+        recover_staged_commit(spark, table, f"{table}.deleting", ["cell"])
+        codes = read_index_table(spark, table)
+        ids_df = ids_frame(spark, ids, id_col, id_col, lambda: codes)
+        l0_deleted = delete_from_l0(spark, table, ids_df, id_col)
+        hit = codes.join(F.broadcast(ids_df), id_col)
+        per_cell = {r["cell"]: r["n"] for r in
+                    hit.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
+                    .collect()}
+        if not per_cell:
+            return {"rows_deleted": l0_deleted, "cells_rewritten": 0,
+                    "cells_emptied": 0}
+        cells = sorted(per_cell)
+        keep = (codes.where(F.col("cell").isin(cells))
+                .join(F.broadcast(ids_df), id_col, "left_anti"))
+        stage = f"{table}.deleting"
+        write_partitioned(keep, stage, ["cell"], len(cells), "overwrite")
+        # commit by MOVING the staged cell dirs into place; the staged
+        # listing also tells which cells survived
+        moved = overwrite_partition_dirs(spark, table, stage, ["cell"])
+        kept_cells = {int(rel.split("=", 1)[1]) for rel in moved}
+        _, fs = _hpath(spark, stage)
+        emptied = [c for c in cells if c not in kept_cells]
+        for c in emptied:
+            dp, _ = _hpath(spark, f"{table}/cell={c}")
+            fs.delete(dp, True)
+        # deleting EVERY vector removes every cell directory; leave a
+        # schema-bearing empty file so the table stays readable
+        _ensure_readable(spark, table, codes.schema)
+        # the raw directory deletes bypass Spark's write path, so its
+        # file-status cache still lists the removed files — refresh, or
+        # the next probe dies with FAILED_READ_FILE.FILE_NOT_EXIST
+        spark.catalog.refreshByPath(table)
+        return {"rows_deleted": int(sum(per_cell.values())) + l0_deleted,
+                "cells_rewritten": len(kept_cells & set(cells)),
+                "cells_emptied": len(emptied)}
 
 
 def stream_append_ann_index(stream_df: DataFrame, path: str,
@@ -1875,36 +1641,25 @@ def stream_append_ann_index(stream_df: DataFrame, path: str,
                             l0: bool = False):
     """Streaming twin of :func:`append_ann_index`: a ``foreachBatch``
     sink that encodes each micro-batch of new vectors with the index's
-    frozen quantizers and appends into the cell partitions — "ingest is
-    a stream" for the ANN family, like ``stream_minhash``'s relationship
-    to the batch band index.
+    frozen quantizers and appends it through the same write as the
+    batch path — into the cell partitions, or with ``l0=True`` one file
+    per epoch into ``codes_l0`` (the continuous-ingest choice: a
+    processingTime stream otherwise adds a file to every touched cell
+    each tick).  Returns the started StreamingQuery.
 
     Delivery is the foreachBatch contract: exactly-once under normal
     operation, at-least-once across failure replays (an epoch retried
     after a partial append can duplicate ids — dedupe at probe time or
-    compact the cell partitions; the quantizers being frozen means a
-    replayed row re-encodes identically, so duplicates are exact and
-    trivially collapsible).  Returns the started StreamingQuery.
+    compact; the frozen quantizers make the duplicates exact).  Each
+    epoch refuses while a ``_MAINTENANCE`` marker is present, failing
+    the query; the checkpoint replays the epoch afterwards.
 
     ``trigger`` is passed through to ``writeStream.trigger`` verbatim
     (e.g. ``{"processingTime": "30 seconds"}`` for continuous ingest,
     ``{"once": True}``); the default ``{"availableNow": True}`` drains
     available input and stops — the repo's replay-exact test
     convention.  The frozen quantizers are read ONCE at start and
-    captured in the sink closure — a long-lived (processingTime)
-    stream must not pay a codes-schema read plus two parquet collects
-    per micro-batch for model-sized constants.
-
-    ``l0=True`` is the continuous-ingest default to prefer: each epoch
-    writes ONE file into the unpartitioned ``codes_l0`` side table
-    instead of one file into EVERY touched cell (a processingTime
-    stream otherwise fragments all n_centroids cells every tick —
-    SCALE.md r14 measured 256 files/batch at 2 s ticks, with the only
-    remedy a full-index rewrite).  Probes union L0 in transparently;
-    :func:`compact_ann_index` folds it into the cell layout.  Replay
-    semantics are unchanged: a retried epoch duplicates exact rows in
-    L0 exactly as it would in the cell partitions, and the same
-    probe-time ``dedupe=`` / compaction answers apply."""
+    captured in the sink closure, not per micro-batch."""
     spark = stream_df.sparkSession
     codes, centroids, codebooks, l2_cells, residual = \
         read_ann_index(spark, path)
@@ -1914,24 +1669,12 @@ def stream_append_ann_index(stream_df: DataFrame, path: str,
     def _sink(batch_df: DataFrame, _epoch: int) -> None:
         if batch_df.isEmpty():
             return
-        # per-epoch maintenance check: failing the epoch fails the
-        # query LOUDLY; the checkpoint replays it after the compaction
-        # finishes instead of appending into a mid-swap index
-        from carbonapi_spark.datapipe.maintenance import (
-            assert_not_under_maintenance)
         assert_not_under_maintenance(batch_df.sparkSession, path,
                                      "stream_append_ann_index")
         delta = enc(batch_df, codebooks, centroids, id_col, vec_col,
                     l2_cells=l2_cells, residual=residual,
                     keep_vec=keep_vec)
-        if l0:
-            # repartition(1), not coalesce(1) — same reason as
-            # append_ann_index: keep the per-epoch encode parallel
-            delta.repartition(1).write.mode("append") \
-                .parquet(f"{path}/codes_l0")
-        else:
-            delta.repartition(F.col("cell")).write.mode("append") \
-                .partitionBy("cell").parquet(f"{path}/codes")
+        append_delta(delta, f"{path}/codes", ["cell"], len(centroids), l0)
 
     w = stream_df.writeStream.foreachBatch(_sink)
     if checkpoint_dir is not None:

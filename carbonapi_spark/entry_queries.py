@@ -2201,7 +2201,9 @@ def _q_stream_ann_replay(spark, sf_dir):
         # file count via driver listing — zero Spark jobs (r14; the
         # old input_file_name().distinct().count() was a full job)
         import os as _os
-        n_l0 = sum(1 for f in _os.listdir(f"{p}/codes_l0")
+
+        from carbonapi_spark.datapipe.maintenance import l0_path
+        n_l0 = sum(1 for f in _os.listdir(l0_path(f"{p}/codes"))
                    if f.endswith(".parquet"))
         assert n_l0 == 2        # one L0 file per epoch, no cell spray
         out = ann_index_topk(spark, p, emb.where(F.col("vec_id") < 5),

@@ -66,6 +66,23 @@ def memo() -> dict:
     return d
 
 
+def reuse(key, df: DataFrame, build):
+    """``build()``'s value, shared within THIS thread's request by every
+    call whose ``key`` matches and whose ``df`` plan gives the same
+    result (``sameResult`` canonicalizes expression ids, so two
+    separately built but identical plans match).  Lets a replayed
+    append re-use its encoded delta, and a repeated probe its query-side
+    rows, instead of recomputing them; :func:`release` drops the value
+    at the request boundary, so nothing is shared across requests."""
+    hit = memo().get(key)
+    if hit is not None and df._jdf.queryExecution().analyzed().sameResult(
+            hit[0].queryExecution().analyzed()):
+        return hit[1]
+    value = build()
+    memo()[key] = (df._jdf, value)
+    return value
+
+
 def release() -> int:
     """Unpersist every scratch DataFrame tracked by THIS thread (and
     drop its request-scoped memo); returns how many were tracked."""

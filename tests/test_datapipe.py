@@ -4637,82 +4637,6 @@ def test_stream_covariance_grows_across_runs(spark, tmp_path):
     assert streamed == batch
 
 
-def test_maintenance_lock_blocks_appends_and_second_op(spark, tmp_path):
-    """VERDICT r13 #5: the single-writer maintenance contract is now
-    ENFORCED, not just documented — while a compaction/deletion holds
-    the ``_MAINTENANCE`` marker, every append twin refuses loudly
-    (instead of losing its rows silently to the rename swap), a second
-    maintenance op refuses too, and the marker is removed afterward so
-    appends resume."""
-    import pytest
-
-    from carbonapi_spark.datapipe.maintenance import (
-        assert_not_under_maintenance, maintenance_lock)
-    from carbonapi_spark.datapipe.retrieval import (
-        append_text_index, compact_text_index, write_text_index)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    half = docs.where(F.col("doc_id") % 2 == 0)
-    rest = docs.where(F.col("doc_id") % 2 == 1)
-    p = str(tmp_path / "tix_lock")
-    write_text_index(half, p, n_buckets=16)
-    with maintenance_lock(spark, p, "staged-compaction"):
-        with pytest.raises(IOError, match="under maintenance"):
-            append_text_index(rest, p)
-        with pytest.raises(IOError, match="already under maintenance"):
-            with maintenance_lock(spark, p, "second-op"):
-                pass
-        with pytest.raises(IOError, match="refused"):
-            assert_not_under_maintenance(spark, p, "probe-side-check")
-    # marker gone -> appends work again, and real maintenance runs
-    append_text_index(rest, p)
-    stats = compact_text_index(spark, p)
-    assert stats["rows_after"] > 0
-    # a crashed run leaves the marker; operators remove it by hand
-    import os
-    assert not os.path.exists(f"{p}/_MAINTENANCE")
-
-
-def test_maintenance_lock_covers_ann_and_band_appends(spark, tmp_path):
-    """The marker check is wired into EVERY append twin — ANN and band
-    index appends refuse under an active marker too."""
-    import pytest
-
-    from carbonapi_spark.datapipe.dedup import (append_band_index,
-                                                write_band_index)
-    from carbonapi_spark.datapipe.maintenance import maintenance_lock
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    corpus = docs.where(F.col("doc_id") % 5 != 4)
-    delta = docs.where(F.col("doc_id") % 5 == 4)
-    p = str(tmp_path / "band_lock")
-    write_band_index(corpus, p, num_hashes=16, bands=4, ngram=2)
-    with maintenance_lock(spark, p, "compaction"):
-        with pytest.raises(IOError, match="under maintenance"):
-            append_band_index(delta, p)
-    append_band_index(delta, p)   # marker released
-
-
-def test_compact_emptied_index_stays_readable(spark, tmp_path):
-    """r14 review (reproduced): full-mode compaction of an EMPTIED
-    table (post delete-everything) used to swap in a file-less
-    directory, re-bricking the table the deletion placeholder had
-    kept readable — compact now stages through _ensure_readable."""
-    from carbonapi_spark.datapipe.retrieval import (
-        bm25_query_index, compact_text_index, delete_from_text_index,
-        write_text_index)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    some = docs.where(F.col("doc_id") % 10 == 0)
-    p = str(tmp_path / "tix_empty")
-    write_text_index(some, p, n_buckets=8)
-    delete_from_text_index(spark, p,
-                           [r["doc_id"] for r in
-                            some.select("doc_id").collect()])
-    stats = compact_text_index(spark, p)          # full mode
-    assert stats["rows_after"] == 0
-    # table still readable, probes still defined
-    assert spark.read.parquet(f"{p}/postings").count() == 0
-    assert bm25_query_index(spark, p, "anything").count() == 0
-
-
 def test_maintenance_lock_failure_leaves_marker(spark, tmp_path):
     """r14 review: an exception out of the locked block must LEAVE the
     _MAINTENANCE marker (the artifact may be mid-swap — the documented
@@ -4738,83 +4662,6 @@ def test_maintenance_lock_failure_leaves_marker(spark, tmp_path):
     with maintenance_lock(spark, p, "ok-op"):
         pass
     assert not os.path.exists(f"{p}/_MAINTENANCE")
-
-
-def test_compaction_recovers_leftover_stage(spark, tmp_path):
-    """ADVICE r14: a crash inside overwrite_partition_dirs (between the
-    live-dir delete and the staged-dir rename) leaves a combo's rows
-    ONLY under the committed .compacting stage; before this fix a
-    retried compaction rebuilt the stage from the now-lossy live table
-    with mode("overwrite") — permanent row loss.  A retry must first
-    fold the committed stage back in.  An UNCOMMITTED stage (no
-    _SUCCESS: a crash mid-write over an intact table) must instead be
-    discarded, not folded in as data."""
-    import os
-    import shutil
-
-    from carbonapi_spark.datapipe.dedup import (append_band_index,
-                                                compact_band_index,
-                                                write_band_index)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    corpus = docs.where(F.col("doc_id") % 5 != 4)
-    delta = docs.where(F.col("doc_id") % 5 == 4)
-    p, p_ref = str(tmp_path / "crashy"), str(tmp_path / "clean")
-    for q in (p, p_ref):
-        write_band_index(corpus, q, num_hashes=16, bands=4, ngram=2)
-        append_band_index(delta, q)
-        append_band_index(delta, q)          # replayed epoch
-    # simulate the crash window: one live combo dir has been deleted
-    # and its rewritten rows sit only under a COMMITTED stage
-    live = sorted(d for d in os.listdir(f"{p}/bands") if "=" in d)[0]
-    buck = sorted(d for d in os.listdir(f"{p}/bands/{live}"))[0]
-    rel = f"{live}/{buck}"
-    os.makedirs(f"{p}/bands.compacting/{live}")
-    shutil.move(f"{p}/bands/{rel}", f"{p}/bands.compacting/{rel}")
-    open(f"{p}/bands.compacting/_SUCCESS", "w").close()
-    spark.catalog.refreshByPath(f"{p}/bands")
-    stats = compact_band_index(spark, p)
-    ref = compact_band_index(spark, p_ref)
-    assert stats["rows_after"] == ref["rows_after"]   # nothing lost
-    assert not os.path.exists(f"{p}/bands.compacting")
-    # uncommitted leftover: junk rows under a stage with NO _SUCCESS
-    # must be discarded (the live table is intact in that crash mode)
-    spark.read.parquet(f"{p}/bands").limit(5).write \
-        .parquet(f"{p}/bands.compacting/{rel}")
-    os.remove(f"{p}/bands.compacting/{rel}/_SUCCESS")
-    stats2 = compact_band_index(spark, p)
-    assert stats2["rows_after"] == ref["rows_after"]
-    assert not os.path.exists(f"{p}/bands.compacting")
-
-
-def test_failed_overlapped_build_leaves_no_index(spark, tmp_path):
-    """ADVICE r14: write_band_index/write_text_index run the data write
-    and the small metadata writes concurrently (overlap_jobs); if the
-    big write fails the metadata jobs may already have committed,
-    leaving a half-built index whose stats table reads as valid.  A
-    failed build must be unambiguously ABSENT."""
-    import os
-
-    import pytest
-
-    from carbonapi_spark.datapipe.dedup import write_band_index
-    from carbonapi_spark.datapipe.retrieval import write_text_index
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # poison ONE row so the heavy data write fails at action time while
-    # the tiny metadata writes (which never touch the corpus) succeed
-    poisoned = docs.withColumn(
-        "text", F.when(F.col("doc_id") != 0, F.col("text"))
-        .otherwise(F.raise_error(F.lit("boom: poisoned row"))))
-    p = str(tmp_path / "failed_band")
-    with pytest.raises(Exception, match="boom"):
-        write_band_index(poisoned, p, num_hashes=16, bands=4, ngram=2)
-    assert not os.path.exists(f"{p}/stats")
-    assert not os.path.exists(f"{p}/bands")
-    p2 = str(tmp_path / "failed_text")
-    with pytest.raises(Exception, match="boom"):
-        write_text_index(poisoned, p2)
-    assert not os.path.exists(f"{p2}/stats")
-    assert not os.path.exists(f"{p2}/postings")
-    assert not os.path.exists(f"{p2}/doclens")
 
 
 def test_band_delete_rows_after_includes_l0_survivors(spark, tmp_path):
